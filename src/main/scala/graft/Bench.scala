@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -15,7 +15,9 @@ import java.util.concurrent.atomic.AtomicLong
   * way. The session is warmed (codegen, shuffle infra, parquet
   * reader) before anything is measured; `queries_min` carries the
   * per-query best for noise-floor reading. `SPARK_GRAFT_ONLY`
-  * (comma-separated names) restricts the run while iterating.
+  * (comma-separated names) restricts the run while iterating. A
+  * query that throws is named under `"failed"` with its first error
+  * and is left out of `total`, `queries` and `queries_min`.
   *
   * Variance instrumentation (r5 verdict #1): the full BENCH_LOCAL.json
   * record carries, per query, the per-rep wall times plus per-rep
@@ -76,23 +78,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // shared shuffle/AQE perf confs (r12): see GraftSession.perfConfs
-    // for the at-scale justification of each; the advisory partition
-    // size stays env-parameterised so cluster runs can size it up.
-    val spark = GraftSession.perfConfs.foldLeft(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
+    val spark = GraftSession.get(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new MetricsListener
     spark.sparkContext.addSparkListener(metrics)
@@ -142,8 +132,7 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
     case class Rep(sec: Double, gcMs: Long, spillBytes: Long, drops: Long,
       taskMs: Long, cpuMs: Long)
-    def runRep(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Option[Rep] = {
+    def runRep(fn: (SparkSession, String) => DataFrame): Rep = {
       // the composed dedup operators persist small result frames that
       // Spark's CacheManager would share across reps (and across
       // queries with matching sub-plans) — a warm rep must re-run the
@@ -154,34 +143,43 @@ object Bench {
       drainBus()
       metrics.reset()
       val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        drainBus()
-        Some(Rep(sec, metrics.gcMs.get, metrics.spillBytes.get,
-          metrics.cacheDrops.get, metrics.taskMs.get,
-          metrics.cpuMs.get / 1000000L)) // ns accumulator -> ms once
-      } catch { case _: Throwable => None }
+      fn(spark, sfDir).count()
+      val sec = (System.nanoTime() - t0) / 1e9
+      drainBus()
+      Rep(sec, metrics.gcMs.get, metrics.spillBytes.get,
+        metrics.cacheDrops.get, metrics.taskMs.get,
+        metrics.cpuMs.get / 1000000L) // ns accumulator -> ms once
     }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       s(s.length / 2)
     }
-    val results = selected.map { case (name, fn) =>
-      // One UNRECORDED warmup rep per query: a query's first execution
-      // JIT-compiles its generated code and initializes any lazily-
-      // loaded JDK machinery (r6: t63's first javax.imageio decode);
-      // folding that one-time cost into a measured rep is what made
-      // t63's median 3× its min with every variance counter flat.
-      runRep(fn)
-      var runs = (1 to reps).flatMap(_ => runRep(fn))
-      // adaptive: the slow family gets extra reps so a single
-      // contended rep can't set the median (only when the base pass
-      // used the default 3 — an explicit SPARK_GRAFT_REPS wins)
-      if (runs.nonEmpty && reps == 3
-          && median(runs.map(_.sec)) >= AdaptiveThresholdSec)
-        runs ++= (1 to ExtraReps).flatMap(_ => runRep(fn))
-      (name, runs)
+    // a query with ANY failing rep is named under "failed" with its
+    // first error and left out of every timing: a -1 or a partial
+    // median would read as a number the board can be judged on
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+    val results = selected.flatMap { case (name, fn) =>
+      try {
+        // One UNRECORDED warmup rep per query: a query's first execution
+        // JIT-compiles its generated code and initializes any lazily-
+        // loaded JDK machinery (t63's first javax.imageio decode);
+        // folding that one-time cost into a measured rep is what made
+        // t63's median 3× its min with every variance counter flat.
+        runRep(fn)
+        var runs = (1 to reps).map(_ => runRep(fn))
+        // adaptive: the slow family gets extra reps so a single
+        // contended rep can't set the median (only when the base pass
+        // used the default 3 — an explicit SPARK_GRAFT_REPS wins)
+        if (reps == 3 && median(runs.map(_.sec)) >= AdaptiveThresholdSec)
+          runs ++= (1 to ExtraReps).map(_ => runRep(fn))
+        Some(name -> runs)
+      } catch { case e: Throwable =>
+        val msg = String.valueOf(e.getMessage).linesIterator
+          .nextOption().getOrElse("").take(200)
+        failed(name) = s"${e.getClass.getSimpleName}: $msg"
+        System.err.println(s"[bench] $name failed: ${failed(name)}")
+        None
+      }
     }
     def fmt(v: Double) = f"$v%.3f"
     // main-line variant: same ms precision, trailing zeros stripped
@@ -199,14 +197,12 @@ object Bench {
     def obj(kv: Seq[(String, String)]): String =
       kv.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
-    val med = results.map { case (n, rs) =>
-      n -> (if (rs.isEmpty) -1.0 else median(rs.map(_.sec)))
-    }
+    val med = results.map { case (n, rs) => n -> median(rs.map(_.sec)) }
     val qs = obj(med.map { case (n, v) => n -> fmt(v) })
     val qsShort = obj(med.map { case (n, v) => n -> fmtShort(v) })
-    val qmin = obj(results.map { case (n, rs) =>
-      n -> fmt(if (rs.isEmpty) -1.0 else rs.map(_.sec).min)
-    })
+    val qmin = obj(results.map { case (n, rs) => n -> fmt(rs.map(_.sec).min) })
+    val failedObj = obj(failed.toSeq.map { case (n, e) =>
+      n -> Verify.jsonString(e) })
     // per-query per-rep detail: wall secs + the three variance
     // counters, in rep order — the record that distinguishes "slow
     // box" (flat counters) from "evicted cache recomputed" (drops>0,
@@ -232,20 +228,26 @@ object Bench {
     // gets truncated mid-JSON and recorded as unparseable (BENCH_r03,
     // BENCH_r11). queries_min and the rep detail go to the FILE record.
     val mainLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"canary":${fmt(canary)},"queries":$qsShort,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"canary":${fmt(canary)},"queries":$qsShort,""" +
+        (if (failed.isEmpty) "" else s""""failed":$failedObj,""") +
+        s""""sf":"$sfDir"}"""
     println(mainLine)
     // The driver captures only the TAIL of stdout, so the queries_min
     // line was lost in r3/r4 ("parsed": null). Persist the full record
     // — medians, mins AND per-rep detail in one object — to a file
     // read whole.
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"canary":${fmt(canary)},"queries":$qs,"queries_min":$qmin,"rep_detail":$detail,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"canary":${fmt(canary)},"queries":$qs,"queries_min":$qmin,"rep_detail":$detail,"failed":$failedObj,"sf":"$sfDir"}"""
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(sys.env.getOrElse(
           "SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")),
         (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () } // bench output stays best-effort
+    } catch { case e: java.io.IOException =>
+      // the main line above is already out; a lost file record is
+      // reported, not fatal
+      System.err.println(s"[bench] could not write the bench record: $e")
+    }
     spark.stop()
   }
 }

@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Standard session factory: every entry point (tests, Verify, Bench,
-  * pipelines) needs the same conf surface — UTC, ns-parquet tolerance,
-  * AQE, non-ANSI casts (SafeCasts relies on null-on-garbage), and
-  * local-sized shuffle partitioning.
+/** The only session builder: every entry point (tests, Verify, Bench,
+  * pipelines, tools) builds through [[builder]] or [[get]], so all of
+  * them run the same conf surface — UTC, ns-parquet tolerance, AQE,
+  * non-ANSI mode, and local-sized shuffle partitioning. Callers pass
+  * their own core count and set their own log level; `BuilderGuardSpec`
+  * fails the build if another `SparkSession.builder()` appears.
   */
 object GraftSession {
   // Catalog tables (bucketing) need a warehouse + embedded metastore;

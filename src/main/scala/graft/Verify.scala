@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,19 +8,8 @@ object Verify {
     // optional extra args: restrict to the named queries (local
     // iteration aid; the driver always passes exactly two args)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same shared shuffle/AQE perf confs as Bench (GraftSession.perfConfs)
-    // so correctness runs exercise the exact session shape the bench times
-    val spark = GraftSession.perfConfs.foldLeft(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
+    // the one session shape that Bench times and the tests run
+    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // failures are also RECORDED (verify_errors.json) — a stderr-only
@@ -63,32 +51,33 @@ object Verify {
         errors(name) = s"${e.getClass.getSimpleName}: ${e.getMessage}"
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // late-bind the export-reading oracles' scratch dir to THIS run's
     // sfDir (the Spark side wrote to gatePath(sfDir, …)) — token
     // substitution at dump time, so registry init order cannot matter
     val json = SparkEntry.oracleSql
       .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace(Tables.GateDirToken, Tables.gateTag(sfDir)))}"
+        s"${jsonString(k)}: ${jsonString(v.replace(Tables.GateDirToken, Tables.gateTag(sfDir)))}"
       }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
-      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }
+      errors.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
         .mkString("{", ",", "}"))
     Files.writeString(Paths.get(s"$outDir/output_schemas.json"),
-      schemas.map { case (k, v) => s"${q(k)}: ${q(v)}" }
+      schemas.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
         .mkString("{", ",", "}"))
     spark.stop()
   }
+
+  /** JSON string literal: escapes backslash, quote and ALL control
+    * chars (<0x20) — a tab or CR in builder-authored SQL or an error
+    * message would otherwise make a reader's json.load fail. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * `::TYPE` casts of JSON text (normalize_evo_members_v2.py:131-185).
   *
   * Semantics (documented + spec-tested, SURVEY.md §7.3 hard-point 2):
-  *   - garbage / empty input → NULL, never an exception (requires ANSI
-  *     mode off for the final cast; sessions set spark.sql.ansi.enabled
-  *     explicitly via GraftSession);
+  *   - garbage / empty input → NULL, never an exception, under either
+  *     setting of spark.sql.ansi.enabled (every final conversion is a
+  *     `try_` form);
   *   - API-drift dict payloads like {"value": 42} are unwrapped before
   *     casting (get_json_object fallback chain);
   *   - booleans accept true/1/yes/on (+ t/f like Postgres ::BOOLEAN);
@@ -36,15 +36,15 @@ object SafeCasts {
     * _safe_int(int(float)) accepts floats, so parse as decimal then
     * truncate toward zero. */
   def safeLong(c: Column): Column =
-    cleaned(c).cast("decimal(28,8)").cast("long")
+    cleaned(c).try_cast("decimal(28,8)").try_cast("long")
 
   def safeInt(c: Column): Column =
-    cleaned(c).cast("decimal(28,8)").cast("int")
+    cleaned(c).try_cast("decimal(28,8)").try_cast("int")
 
   def safeDecimal(c: Column, precision: Int = 15, scale: Int = 2): Column =
-    cleaned(c).cast(s"decimal($precision,$scale)")
+    cleaned(c).try_cast(s"decimal($precision,$scale)")
 
-  def safeDouble(c: Column): Column = cleaned(c).cast("double")
+  def safeDouble(c: Column): Column = cleaned(c).try_cast("double")
 
   /** true/1/yes/on/t → true; false/0/no/off/f → false; else NULL. */
   def safeBool(c: Column): Column = {
@@ -56,10 +56,10 @@ object SafeCasts {
 
   /** ISO timestamp text → TIMESTAMP (UTC session); invalid → NULL. */
   def safeTimestamp(c: Column): Column =
-    to_timestamp(cleaned(c))
+    try_to_timestamp(cleaned(c))
 
   def safeDate(c: Column): Column =
-    to_date(cleaned(c))
+    try_to_date(cleaned(c))
 
   /** Scalar text (empty → NULL). For struct/array/map columns use
     * `structText` — Spark schemas are static per column, so the

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** In-JVM A/B of one runtime SQL conf over named queries — immune to
   * box drift between separate bench runs (the two arms interleave
   * rep-by-rep in one session). Bench's cache-release discipline per
@@ -14,18 +12,9 @@ object AbConf {
     val (key, offV, onV) = (args(0), args(1), args(2))
     val names = args.drop(3).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = graft.GraftSession.perfConfs.foldLeft(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
+    val spark = graft.GraftSession.get(cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect()
     def rep(name: String, v: String): Double = {

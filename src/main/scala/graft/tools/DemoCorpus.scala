@@ -1,10 +1,9 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.{Bpe, TextOps}
 import graft.operators.{Ann, Chunk, Curate, Decontam, NearDup, Pack,
   Quality, Repetition, Sample, SpanStats}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Usage example + smoke driver for the TRAINING-DATA side: the full
@@ -20,13 +19,7 @@ import org.apache.spark.sql.functions._
 object DemoCorpus {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.get(8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs = Tables(spark, sfDir, "documents")

@@ -1,22 +1,24 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-/** Writes `.explain("formatted")` of the FINAL adaptive plan for each
-  * named query to `<outDir>/<query>_<suffix>.txt` — the before/after
-  * plan evidence the optimization rounds commit under `plans/rNN/`.
+/** Plan auditor: writes `.explain("formatted")` of the FINAL adaptive
+  * plan for each named query to `<outDir>/<query>_<suffix>.txt` — the
+  * before/after plan evidence the optimization rounds commit under
+  * `plans/rNN/`.
   *
   *   sbt "runMain graft.tools.PlanDump <outDir> <suffix> <query...>"
   *
-  * Methodology matches [[Explain]]: the plan is EXECUTED first so AQE
-  * finalizes stages (a pre-execution explain shows isFinalPlan=false
-  * with zero codegen spans), then the formatted mode string plus a
-  * one-line audit (Exchange count, join strategies, codegen spans)
-  * is persisted. Uses the bench's own session shape (local[32],
-  * shuffle.partitions=cpus) so plan shapes match what Bench times.
+  * The plan is EXECUTED first so AQE finalizes stages (a pre-execution
+  * explain shows isFinalPlan=false with zero codegen spans), then the
+  * formatted mode string is persisted under a one-line audit of the
+  * properties that matter at scale: Exchange count, join strategies,
+  * whole-stage codegen spans, predicate pushdown (PushedFilters) and
+  * column pruning (ReadSchema). Uses the bench's own session shape
+  * (local[32], shuffle.partitions=cpus) so plan shapes match what
+  * Bench times.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -26,38 +28,52 @@ object PlanDump {
     val names = args.drop(2).toSeq
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.perfConfs.foldLeft(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.get(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
       graft.CacheRegistry.release()
       spark.catalog.clearCache()
       val df = SparkEntry.queries(n)(spark, sfDir)
+      // execute the plan itself (not a count() wrapper, which builds a
+      // different QueryExecution), then audit the final adaptive plan
       df.queryExecution.executedPlan.execute().count()
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       val plan = df.queryExecution.executedPlan.toString()
-      val audit = "[audit] exchanges=" +
-        plan.split("\n").count(_.contains("Exchange")) +
-        " broadcastHashJoins=" +
-        plan.split("\n").count(_.contains("BroadcastHashJoin")) +
-        " sortMergeJoins=" +
-        plan.split("\n").count(_.contains("SortMergeJoin")) +
-        " codegenSpans=" + Explain.codegenSpans(plan) + "\n"
+      def lines(node: String) = plan.split("\n").count(_.contains(node))
+      def distinct(re: String) = re.r.findAllIn(plan).toSeq.distinct
+        .mkString(" | ")
+      val audit = "[audit] exchanges=" + lines("Exchange") +
+        " broadcastHashJoins=" + lines("BroadcastHashJoin") +
+        " sortMergeJoins=" + lines("SortMergeJoin") +
+        " codegenSpans=" + codegenSpans(plan) +
+        " pushed=" + distinct("PushedFilters: \\[[^\\]]*\\]") +
+        " readSchema=" + distinct("ReadSchema: [^\\n]*") + "\n"
       Files.write(outDir.resolve(s"${n}_$suffix.txt"),
         (s"== $n ($suffix, sf=$sfDir) ==\n" + audit + formatted)
           .getBytes(StandardCharsets.UTF_8))
       println(s"[plandump] wrote ${n}_$suffix.txt  $audit")
     }
     spark.stop()
+  }
+
+  /** Codegen spans in a plan string: the final adaptive plan marks
+    * codegen'd operators with `*(id)` prefixes (the literal
+    * WholeStageCodegen node name only appears in non-adaptive
+    * treeStrings) — a span is one distinct id. */
+  def codegenSpans(plan: String): Int = {
+    val finalSection = plan.indexOf("== Final Plan ==") match {
+      case -1 => plan
+      case i =>
+        // slice strictly before the Initial Plan echo — its *(id)
+        // markers must not inflate the final-plan span count
+        val j = plan.indexOf("== Initial Plan ==", i)
+        plan.substring(i, if (j == -1) plan.length else j)
+    }
+    ("""\*\((\d+)\)""".r.findAllMatchIn(finalSection)
+      .map(m => "s" + m.group(1)).toSet ++
+      """WholeStageCodegen \((\d+)\)""".r.findAllMatchIn(finalSection)
+        .map(m => "w" + m.group(1)).toSet).size
   }
 }

@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{GraftSession, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic corpus scaler for sf1-class validation of the heavy
@@ -78,17 +78,11 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorS) = args.take(3)
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the Tables() NTZ->TIMESTAMP cast is session-timezone-
-      // dependent: an unpinned session on a non-UTC host would shift
-      // every scaled event instant relative to the oracle's UTC read
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the session pins UTC: the Tables() NTZ->TIMESTAMP cast is
+    // session-timezone-dependent, and an unpinned session on a non-UTC
+    // host would shift every scaled event instant relative to the
+    // oracle's UTC read
+    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("WARN")
     scaleDocs(Tables(spark, srcDir, "documents"), factor, pathoDups = 2048)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.functions.Unigram
 
 /** Train a unigram-LM piece table from a parquet corpus and print it
@@ -14,13 +13,7 @@ object TrainUnigram {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val vocabSize = args.lift(1).map(_.toInt).getOrElse(160)
     val maxWords = args.lift(2).map(_.toInt).getOrElse(50000)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.get(8)
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val pieces = Unigram.train(docs, "text", vocabSize, maxWords)

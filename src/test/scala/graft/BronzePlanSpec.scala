@@ -47,17 +47,17 @@ class BronzePlanSpec extends SparkSpec {
     // pre-execution, an adaptive plan prints isFinalPlan=false and ZERO
     // WholeStageCodegen spans — the r2 audit read that and concluded
     // codegen was off. Execute the plan itself, then audit the final
-    // adaptive plan (the Explain tool does the same).
+    // adaptive plan (the PlanDump tool does the same).
     val df = spark.range(100000L).toDF("id")
       .groupBy((col("id") % 7).as("k"))
       .agg(sum("id").as("s"))
       .filter(col("s") > 0)
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    val before = graft.tools.Explain.codegenSpans(
+    val before = graft.tools.PlanDump.codegenSpans(
       df.queryExecution.executedPlan.toString())
     df.queryExecution.executedPlan.execute().count()
     val plan = df.queryExecution.executedPlan.toString()
-    val after = graft.tools.Explain.codegenSpans(plan)
+    val after = graft.tools.PlanDump.codegenSpans(plan)
     assert(plan.contains("isFinalPlan=true"))
     assert(after >= 2, s"expected >=2 codegen spans (each side of the " +
       s"shuffle), got $after in final plan:\n$plan")

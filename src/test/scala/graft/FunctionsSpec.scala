@@ -48,6 +48,30 @@ class FunctionsSpec extends SparkSpec {
     assert(df.collect().map(_.getString(0)).toSeq == Seq("12.51", "99.90"))
   }
 
+  test("SafeCasts: garbage -> NULL, identical with ANSI mode on and off") {
+    val garbage = Seq("abc", "", "1e30", """{"value":"x"}""",
+      "2023-13-45T99:99:99", "2023-02-30")
+    val key = "spark.sql.ansi.enabled"
+    val saved = spark.conf.get(key)
+    // the frame is built AFTER the conf is set: a cast takes its eval
+    // mode when the expression is analysed, not when it runs
+    def rows(ansi: String) = {
+      spark.conf.set(key, ansi)
+      garbage.toDF("s").select(
+        SafeCasts.safeLong(col("s")), SafeCasts.safeInt(col("s")),
+        SafeCasts.safeDecimal(col("s")), SafeCasts.safeDouble(col("s")),
+        SafeCasts.safeTimestamp(col("s")), SafeCasts.safeDate(col("s")))
+        .collect().map(_.toSeq.map(Option(_))).toSeq
+    }
+    val (on, off) = try (rows("true"), rows("false"))
+      finally spark.conf.set(key, saved)
+    assert(on == off)
+    // '1e30' is a well-formed double; every other cell is garbage
+    val expected = garbage.map(g => Seq.tabulate(6)(i =>
+      if (g == "1e30" && i == 3) Some(1e30) else None))
+    assert(off == expected)
+  }
+
   // ---- Keys (K6) — exact parity with the Python reference constants
 
   test("entryId matches Python int(md5[:15],16) %% 10^15 bit-for-bit") {
