@@ -4,13 +4,21 @@
 Runs each oracle_sql.json query in DuckDB over the sf parquet tables and
 compares with the Spark result parquet written by graft.Verify.
 Usage: python3 scripts/local_gate.py /root/testdata/sf0.01 /tmp/verify_out
+
+DuckDB spills to a fresh directory under the system temp dir, capped at
+TEMP_CAP and removed at exit; an oracle that needs more spill than that
+is reported as FAIL with DuckDB's error, like any other failed query.
 """
 import json
+import shutil
 import sys
+import tempfile
 from pathlib import Path
 
 import duckdb
 import pandas as pd
+
+TEMP_CAP = "8GiB"
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -28,7 +36,17 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main(sfdir: str, outdir: str) -> int:
-    con = duckdb.connect()
+    spill = tempfile.mkdtemp(prefix="local_gate_")
+    try:
+        with duckdb.connect() as con:
+            con.execute(f"SET temp_directory = '{spill}'")
+            con.execute(f"SET max_temp_directory_size = '{TEMP_CAP}'")
+            return compare(con, sfdir, outdir)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+
+
+def compare(con, sfdir: str, outdir: str) -> int:
     for t in TABLES:
         p = Path(sfdir) / f"{t}.parquet"
         if p.exists():
@@ -45,7 +63,8 @@ def main(sfdir: str, outdir: str) -> int:
             got = canon(pd.read_parquet(spark_dir))
             want = canon(con.execute(sql).fetchdf())
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: {e}")
+            cause = " ".join(str(e).split())
+            print(f"FAIL {name}: {cause}")
             n_bad += 1
             continue
         if list(got.columns) != list(want.columns):

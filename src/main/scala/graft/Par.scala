@@ -1,9 +1,10 @@
 package graft
 
-import java.util.concurrent.Executors
+import java.util.UUID
+import java.util.concurrent.{Callable, ExecutionException,
+  ExecutorCompletionService, Executors}
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import org.apache.spark.sql.SparkSession
 
 /** Concurrent submission of INDEPENDENT Spark job chains from the
   * driver (optimization guide §2.6 "overlap independent jobs"):
@@ -16,11 +17,17 @@ import scala.concurrent.duration.Duration
   * the independent chains from a small thread pool lets the next
   * job's tasks back-fill cores the current job's tail leaves idle.
   *
-  * Failure contract: the first failing chain's exception propagates
-  * (unwrapped from the ExecutionException) after the pool shuts
-  * down; results are only returned when every chain succeeded. Job
-  * descriptions/groups are thread-local in Spark, so each chain may
-  * label itself without clobbering the others.
+  * Failure contract: the first chain to fail (in completion order,
+  * not input order) fails the call at once with its own exception,
+  * unwrapped from the ExecutionException. Every chain runs in its own
+  * Spark job group; on that first failure the other chains' groups
+  * are cancelled, running jobs and any they would submit next, with
+  * task threads interrupted, and chains still queued never start.
+  * Driver-side code of a cancelled chain is not interrupted: it ends
+  * at its next job, whose failure nobody reads. Results are only
+  * returned when every chain succeeded. Without an active session the
+  * chains run ungrouped, and a failure then cancels nothing. Each
+  * chain keeps the caller's job description.
   */
 object Par {
 
@@ -36,13 +43,33 @@ object Par {
   def parN[A](thunks: Seq[() => A], parallelism: Int = 4): Seq[A] = {
     if (thunks.isEmpty) return Seq.empty
     if (thunks.size == 1) return Seq(thunks.head())
+    val sc = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val description = sc.map(_.getLocalProperty("spark.job.description"))
+    val groups = thunks.indices.map(i => s"graft-par-${UUID.randomUUID()}-$i")
     val pool = Executors.newFixedThreadPool(
       math.min(parallelism, thunks.size))
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
+    val done = new ExecutorCompletionService[A](pool)
+    val futures = thunks.zip(groups).map { case (t, g) =>
+      done.submit(new Callable[A] {
+        def call(): A = {
+          sc.foreach(_.setJobGroup(g, description.orNull,
+            interruptOnCancel = true))
+          t()
+        }
+      })
+    }
     try {
-      val fs = thunks.map(t => Future(t()))
-      fs.map(f => Await.result(f, Duration.Inf))
+      for (_ <- futures.indices) {
+        try done.take().get()
+        catch { case e: ExecutionException => throw e.getCause }
+      }
+      futures.map(_.get())
+    } catch {
+      case t: Throwable =>
+        futures.foreach(_.cancel(false))
+        sc.foreach(c => groups.foreach(c.cancelJobGroupAndFutureJobs))
+        throw t
     } finally pool.shutdown()
   }
 }

@@ -1,8 +1,15 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Keyed-upsert semantics over plain Parquet tables (SURVEY.md §2
   * K3/K4/K7–K10).
@@ -24,6 +31,13 @@ import org.apache.spark.sql.functions._
   * entries merges against one `entry_year`, not the 110M-row history
   * (reference evo_schemas.sql:417-462 partitions `entries` by year for
   * exactly this reason).
+  *
+  * Fixed per-table cost: a daily delta is tiny, so what an upsert
+  * costs is mostly jobs, not data. Opening a table reads its schema
+  * from one footer on the driver (`readIfExists`) instead of through
+  * Spark's one-task inference job, and the merge itself is one keyed
+  * window over target ∪ source (`merge`), with no second scan of the
+  * target and no join.
   *
   * Crash safety: every swap goes target→`__bak`, tmp→target, drop bak —
   * a crash between the renames leaves `__bak` holding the full pre-swap
@@ -57,8 +71,48 @@ object MergeOps {
     f.exists(p)
   }
 
+  /** The table at `path`, if any. Its data schema is read from one
+    * footer on the driver and handed to the reader, so opening a table
+    * launches no Spark job (see [[footerSchema]]). */
   def readIfExists(spark: SparkSession, path: String): Option[DataFrame] =
-    if (exists(spark, path)) Some(spark.read.parquet(path)) else None
+    if (!exists(spark, path)) None
+    else Some(footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path)))
+
+  /** The data schema Spark's non-merging parquet inference would find:
+    * the footer of the first data file in path order (the files Spark's
+    * file index lists, minus partition columns, which the reader still
+    * infers from the directory names). Spark reads that one footer in a
+    * one-task job; here it is read on the driver and converted with
+    * Spark's own converter under the session's conf. None — infer as
+    * usual — when schema merging is on, summary files exist, or there
+    * is no data file. */
+  private def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) return None
+    val (f, root) = fs(spark, path)
+    // Spark's file-index name filter (PartitioningAwareFileIndex)
+    def hidden(n: String) =
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")
+    def summary(n: String) =
+      n.startsWith("_metadata") || n.startsWith("_common_metadata")
+    def files(p: Path): Seq[FileStatus] =
+      f.listStatus(p).toSeq
+        .filter(s => !hidden(s.getPath.getName) || summary(s.getPath.getName))
+        .flatMap(s => if (s.isDirectory) files(s.getPath) else Seq(s))
+    val listed = files(root)
+    if (listed.exists(s => summary(s.getPath.getName))) return None
+    listed.sortBy(_.getPath.toString).headOption.map { first =>
+      val meta = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(first,
+          spark.sparkContext.hadoopConfiguration),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, meta),
+        new ParquetToSparkSchemaConverter(conf))
+    }
+  }
 
   /** Atomic-ish overwrite: write to `<path>__tmp`, then swap via
     * `__bak` (see crash-safety note on the object). Plain
@@ -92,7 +146,18 @@ object MergeOps {
     * columns (schema evolution, two-sided and wedge-free).
     * Package-visible: the MERGE semantics are storage-independent, so
     * every [[TableFormat]] implementation shares THIS definition —
-    * two formats can't drift apart on what an upsert means. */
+    * two formats can't drift apart on what an upsert means.
+    *
+    * One keyed window does all of it: `row_number` picks the winner,
+    * and over the same partitioning a preserved column takes the
+    * target row's non-null value (`first(..., ignoreNulls)` over the
+    * whole key group), else the winner's. No second target scan, no
+    * join. A NULL key never matches an existing row (it would not in
+    * a keyed join either), so its preserved columns keep the winner's
+    * values. Output columns: source order with target-only columns
+    * appended; when anything is preserved, the keys come first — the
+    * layout every table upserted with a preserved column already has
+    * on disk. */
   private[operators] def merge(target: DataFrame, source: DataFrame,
       keys: Seq[String], versionCol: String,
       preserveOnUpdate: Seq[String]): DataFrame = {
@@ -103,23 +168,31 @@ object MergeOps {
     val srcNames = source.columns.map(_.toLowerCase).toSet
     val missing = target.columns.toSeq
       .filterNot(c => srcNames.contains(c.toLowerCase))
-    val merged = Dedup.keepLatest(
-      source.withColumn("__is_new", lit(1))
-        .unionByName(target.withColumn("__is_new", lit(0)),
-          allowMissingColumns = true),
-      keys, Seq(col(versionCol), col("__is_new")))
     val preserve = (preserveOnUpdate ++ missing).distinct
-    if (preserve.isEmpty) merged.drop("__is_new")
-    else {
-      // keep target's value for preserved columns when the key existed
-      val old = target.select(
-        (keys.map(col) ++ preserve.map(c => col(c).as(s"__old_$c"))): _*)
-      preserve.foldLeft(
-        merged.drop("__is_new").join(old, keys, "left")) { (acc, c) =>
-          acc.withColumn(c, coalesce(col(s"__old_$c"), col(c)))
-            .drop(s"__old_$c")
-        }
+    val all = source.withColumn("__is_new", lit(1))
+      .unionByName(target.withColumn("__is_new", lit(0)),
+        allowMissingColumns = true)
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col(versionCol).desc, col("__is_new").desc)
+    val group = w.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    val keyed = keys.map(k => col(k).isNotNull).reduce(_ && _)
+    def is(a: String, b: String) = a.equalsIgnoreCase(b)
+    // by name as stored: a dot in a column name is not a field path
+    def stored(n: String) = col("`" + n.replace("`", "``") + "`")
+    val names = all.columns.toSeq.filterNot(_ == "__is_new")
+    val ordered =
+      if (preserve.isEmpty) names
+      else keys.flatMap(k => names.find(is(_, k))) ++
+        names.filterNot(n => keys.exists(is(n, _)))
+    val out = ordered.map { n =>
+      preserve.find(is(_, n)).fold(stored(n)) { p =>
+        coalesce(when(keyed, first(when(col("__is_new") === 0, stored(n)),
+          ignoreNulls = true).over(group)), stored(n)).as(p)
+      }
     }
+    all.select(out :+ row_number().over(w).as("__rn"): _*)
+      .filter(col("__rn") === 1).drop("__rn")
   }
 
   /** Upsert `source` into the parquet table at `path`, keyed on `keys`,
@@ -295,24 +368,24 @@ object MergeOps {
     // source must reach EVERY partition's files or plain reads drop
     // the new column. Rare case -> one full tmp-swap rewrite (which
     // also lifts the no-self-read constraint for that pass).
-    val widens = readIfExists(spark, path).exists { target =>
+    val widening = readIfExists(spark, path).filter { target =>
       val tgtNames = target.columns.map(_.toLowerCase).toSet
       source.columns.exists(c => !tgtNames.contains(c.toLowerCase))
     }
-    if (widens) {
-      val target = spark.read.parquet(path)
-      val kept = target.join(
-        source.select(col(partitionCol)).distinct(),
-        Seq(partitionCol), "left_anti")
-      overwrite(spark,
-        source.unionByName(kept, allowMissingColumns = true), path,
-        Seq(partitionCol))
-    } else {
-      source.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol)
-        .parquet(path)
-      spark.catalog.refreshByPath(path) // see overwrite()
+    widening match {
+      case Some(target) =>
+        val kept = target.join(
+          source.select(col(partitionCol)).distinct(),
+          Seq(partitionCol), "left_anti")
+        overwrite(spark,
+          source.unionByName(kept, allowMissingColumns = true), path,
+          Seq(partitionCol))
+      case None =>
+        source.write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy(partitionCol)
+          .parquet(path)
+        spark.catalog.refreshByPath(path) // see overwrite()
     }
   }
 }

@@ -28,18 +28,14 @@ class MedallionPipeline(spark: SparkSession, root: String,
     s"$root/silver/$source/$entity"
   def goldPath(table: String) = s"$root/gold/$table"
 
-  private def silver(source: String, entity: String): DataFrame =
-    spark.read.parquet(silverPath(source, entity))
-
   /** A run may carry only a subset of entities (e.g. members-only
     * increment); transforms skip sources that were never loaded.
     * Silver is ALWAYS parquet (SilverLoader's layer), whatever format
-    * the gold tables bind to — so existence is a filesystem question,
-    * not a `format` one. */
+    * the gold tables bind to — so it is read through MergeOps, not
+    * through `format`. */
   private def withSilver(source: String, entity: String)(
       f: DataFrame => Unit): Unit =
-    if (MergeOps.exists(spark, silverPath(source, entity)))
-      f(silver(source, entity))
+    MergeOps.readIfExists(spark, silverPath(source, entity)).foreach(f)
 
   // ------------------------------------------------------------------ EVO
 

@@ -3,6 +3,10 @@ package graft.tools
 import graft.SparkEntry
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+  ReusedExchangeExec, ShuffleExchangeLike}
 
 /** Plan auditor: writes `.explain("formatted")` of the FINAL adaptive
   * plan for each named query to `<outDir>/<query>_<suffix>.txt` — the
@@ -14,7 +18,8 @@ import java.nio.file.{Files, Paths}
   * The plan is EXECUTED first so AQE finalizes stages (a pre-execution
   * explain shows isFinalPlan=false with zero codegen spans), then the
   * formatted mode string is persisted under a one-line audit of the
-  * properties that matter at scale: Exchange count, join strategies,
+  * properties that matter at scale: shuffle, broadcast and reused
+  * exchanges (see [[exchanges]]), join strategies,
   * whole-stage codegen spans, predicate pushdown (PushedFilters) and
   * column pruning (ReadSchema). Uses the bench's own session shape
   * (local[32], shuffle.partitions=cpus) so plan shapes match what
@@ -44,7 +49,9 @@ object PlanDump {
       def lines(node: String) = plan.split("\n").count(_.contains(node))
       def distinct(re: String) = re.r.findAllIn(plan).toSeq.distinct
         .mkString(" | ")
-      val audit = "[audit] exchanges=" + lines("Exchange") +
+      val ex = exchanges(df.queryExecution.executedPlan)
+      val audit = s"[audit] shuffles=${ex.shuffles}" +
+        s" broadcasts=${ex.broadcasts} reusedExchanges=${ex.reused}" +
         " broadcastHashJoins=" + lines("BroadcastHashJoin") +
         " sortMergeJoins=" + lines("SortMergeJoin") +
         " codegenSpans=" + codegenSpans(plan) +
@@ -57,6 +64,26 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  case class Exchanges(shuffles: Int, broadcasts: Int, reused: Int)
+
+  /** Distinct shuffle and broadcast exchanges of a physical plan, by
+    * plan id, counted through adaptive query stages and subqueries; a
+    * reused exchange is counted apart from them. A line count of the
+    * plan string would also count the initial plan's echo and every
+    * line that merely names an exchange. */
+  def exchanges(plan: SparkPlan): Exchanges = {
+    val nodes = PlanWalk.collectWithSubqueries(plan) {
+      case e @ (_: ShuffleExchangeLike | _: BroadcastExchangeLike |
+          _: ReusedExchangeExec) => e
+    }.distinctBy(_.id)
+    Exchanges(
+      nodes.count(_.isInstanceOf[ShuffleExchangeLike]),
+      nodes.count(_.isInstanceOf[BroadcastExchangeLike]),
+      nodes.count(_.isInstanceOf[ReusedExchangeExec]))
+  }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
 
   /** Codegen spans in a plan string: the final adaptive plan marks
     * codegen'd operators with `*(id)` prefixes (the literal
