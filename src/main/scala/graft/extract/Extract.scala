@@ -91,7 +91,7 @@ final class CursorStore(spark: SparkSession, base: String) {
 object Extract {
   /** Run ids are the RFC-3339 start instant with separators stripped
     * (pipedrive_bronze.py:213) — lexicographic order IS run order,
-    * which `Bronze.latestRunId`'s max() relies on. */
+    * which `Bronze.latestRunId` relies on. */
   def runId(now: java.time.Instant): String =
     now.toString.replace(":", "").replace("-", "")
 

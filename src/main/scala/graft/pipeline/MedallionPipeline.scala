@@ -20,6 +20,10 @@ import org.apache.spark.sql.functions._
   * Write modes per table mirror §2 K7–K10: keyed upsert for normal
   * increments, full refresh when the caller knows most rows changed,
   * partition replace for the year-partitioned entries table.
+  *
+  * Silver loads read bronze through `Bronze.readRun`: one pass over
+  * the loaded run's files only (pruned at the file listing), so a
+  * load costs in proportion to the run, not to the bronze history.
   */
 class MedallionPipeline(spark: SparkSession, root: String,
     val format: TableFormat = ParquetTableFormat) {

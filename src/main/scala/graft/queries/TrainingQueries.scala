@@ -1726,8 +1726,10 @@ object TrainingQueries {
     // ---- combined decontamination report (Decontam.fullReport):
     // both leakage signals per document — n-gram span overlap AND
     // embedding proximity — in one frame; the oracle composes the t36
-    // span chain with the t42 cosine chain (docs and embeddings are
-    // 1:1 on id in the testdata).
+    // span chain with the t42 cosine chain. fullReport takes docs and
+    // bench pre-joined to their embeddings, so both signals see only
+    // documents that have one: the oracle's span chain starts from
+    // that join too (sf0.1 embeds doc ids 0..1999 of 5,000).
     QueryDef(
       "t48_contamination_report",
       (s, dir) => {
@@ -1742,7 +1744,8 @@ object TrainingQueries {
           "v", joined.filter(col("doc_id") % 10 === 0), "text", "v",
           n = 5, threshold = 0.9)
       },
-      Some(s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+      Some(s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents
+              |  WHERE doc_id IN (SELECT vec_id FROM embeddings)),
               |bg AS (SELECT DISTINCT
               |    unnest(${DuckSql.ngramsRaw("toks", 5)}) AS gram
               |  FROM t WHERE doc_id % 10 = 0),

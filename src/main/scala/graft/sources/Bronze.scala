@@ -1,6 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.expressions.FileLineNo
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
 import org.apache.spark.sql.functions._
 
 /** Bronze layer: immutable JSONL files under hive-style partition paths
@@ -40,69 +43,82 @@ object Bronze {
     * number + partition columns — the (blob, line) dedup key the
     * reference uses (01_stg_pipedrive.sql:24).
     *
-    * Line numbering without shuffling the text: monotonically
-    * increasing ids are (scanPartition << 33) + rowInPartition, i.e.
-    * consecutive within a scan partition, and rows of one file stream
-    * in order. A tiny per-(file, scanPartition) extent aggregate
-    * (min id + row count) is broadcast back; cumulative counts of the
-    * file's earlier partitions give each extent's line offset. This
-    * handles BOTH packing (many small files in one scan partition —
-    * per-file bases differ) and splitting (one large splittable file
-    * across several partitions — per-extent offsets accumulate);
-    * only (path, long) tuples are shuffled, never the corpus (a
-    * row_number window here would). Tradeoff: the aggregate branch
-    * decompresses the files a second time — two streaming reads beat
-    * one full write+sort+read shuffle cycle, and loads are per-run
-    * deltas anyway. */
+    * One pass, no shuffle, no join: files are read whole, in order,
+    * by one task each ([[WholeFileText]]), so a counter that restarts
+    * at every new `input_file_name()` ([[graft.expressions.FileLineNo]])
+    * numbers each file's lines 1..n. Several small files still pack
+    * into one scan partition; what is given up is intra-file
+    * parallelism for one uncompressed file larger than
+    * `spark.sql.files.maxPartitionBytes` — bronze is written gzip,
+    * which never splits anyway. */
   def read(spark: SparkSession, base: String, source: String,
-      entity: String, scope: Option[String] = None): DataFrame = {
-    // scoped sources nest scope=*/entity=*; detect which layout exists so
-    // callers can read all scopes at once (scope=None on a scoped source)
-    val direct = new org.apache.hadoop.fs.Path(
-      entityPath(base, source, entity, scope = None))
+      entity: String, scope: Option[String] = None): DataFrame =
+    numbered(raw(spark, base, source, entity, scope))
+
+  /** Prune to one run (the reference's latest-run discovery,
+    * load_pipedrive_stg.py:104-137). The run predicate is applied to
+    * the raw relation before any nondeterministic column exists, so it
+    * reaches the scan as a partition filter: the file listing holds
+    * only this run's files and no other run's data is read. */
+  def readRun(spark: SparkSession, base: String, source: String,
+      entity: String, runId: String, scope: Option[String] = None): DataFrame =
+    numbered(raw(spark, base, source, entity, scope)
+      .filter(col("run_id") === runId))
+
+  /** The newest run id of an entity, from the `run_id=` directory
+    * names on the driver — no Spark job, no data read. Run ids sort
+    * lexicographically in run order ([[graft.extract.Extract.runId]]). */
+  def latestRunId(spark: SparkSession, base: String, source: String,
+      entity: String, scope: Option[String] = None): Option[String] = {
+    val glob = new Path(
+      entityGlob(spark, base, source, entity, scope) + "/*/run_id=*")
+    val fs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(glob)).toSeq.flatten
+      .map(_.getPath.getName.stripPrefix("run_id="))
+      .maxOption
+  }
+
+  // scoped sources nest scope=*/entity=*; detect which layout exists so
+  // callers can read all scopes at once (scope=None on a scoped source)
+  private def entityGlob(spark: SparkSession, base: String, source: String,
+      entity: String, scope: Option[String]): String = {
+    val direct = new Path(entityPath(base, source, entity, scope = None))
     val fs = direct.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val path = scope match {
+    scope match {
       case Some(_) => entityPath(base, source, entity, scope)
       case None if fs.exists(direct) => direct.toString
       case None => s"$base/$source/scope=*/entity=$entity"
     }
-    val lines = spark.read
-      .option("basePath", s"$base/$source")
-      .text(path + "/*/*/*")
-      .withColumn("source_blob_path", input_file_name())
-      .withColumn("__mid", monotonically_increasing_id())
-      .withColumn("__pid", shiftright(col("__mid"), 33))
-    // deterministic across the two scans: same file listing -> same
-    // partitions -> same ids, so the re-scan in the aggregate branch
-    // sees identical __mid values
-    val extents = lines
-      .groupBy("source_blob_path", "__pid")
-      .agg(min(col("__mid")).as("__base"), count(lit(1)).as("__cnt"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("source_blob_path").orderBy("__pid")
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, -1)
-    val offsets = extents.withColumn("__off",
-      coalesce(sum(col("__cnt")).over(w), lit(0L)))
-    lines.join(broadcast(offsets), Seq("source_blob_path", "__pid"))
-      .withColumn("source_line_no",
-        (col("__mid") - col("__base") + 1 + col("__off")).cast("int"))
-      .drop("__mid", "__pid", "__base", "__cnt", "__off")
-      .withColumnRenamed("value", "raw_line")
   }
 
-  /** Prune to one run (the reference's latest-run discovery,
-    * load_pipedrive_stg.py:104-137): partition filters prune at the
-    * file listing, no data read for other runs. */
-  def readRun(spark: SparkSession, base: String, source: String,
-      entity: String, runId: String, scope: Option[String] = None): DataFrame =
-    read(spark, base, source, entity, scope).filter(col("run_id") === runId)
+  private def raw(spark: SparkSession, base: String, source: String,
+      entity: String, scope: Option[String]): DataFrame =
+    spark.read.format(classOf[WholeFileText].getName)
+      .option("basePath", s"$base/$source")
+      .load(entityGlob(spark, base, source, entity, scope) + "/*/*/*")
 
-  def latestRunId(spark: SparkSession, base: String, source: String,
-      entity: String, scope: Option[String] = None): Option[String] =
-    read(spark, base, source, entity, scope)
-      .agg(max(col("run_id").cast("string")))
-      .collect().headOption.flatMap(r => Option(r.getString(0)))
+  private def numbered(raw: DataFrame): DataFrame = {
+    val file = input_file_name()
+    val lineNo = GraftColumnBridge.column(
+      FileLineNo(GraftColumnBridge.expression(file)))
+    val partitionCols = raw.columns.filterNot(_ == "value").map(col)
+    raw.select(Seq(file.as("source_blob_path"), col("value").as("raw_line"))
+      ++ partitionCols :+ lineNo.as("source_line_no"): _*)
+  }
+}
+
+/** The text source with every file read whole by one task — the
+  * ordering [[graft.expressions.FileLineNo]] numbers lines by. Gzip,
+  * bronze's only codec, is non-splittable already; this extends the
+  * guarantee to plain text. */
+class WholeFileText extends TextFileFormat {
+  override def isSplitable(spark: SparkSession,
+      options: Map[String, String], path: Path): Boolean = false
+  // TextFileFormat is a case class, equal to any subclass instance: a
+  // cached plain-text read of the same files would otherwise stand in
+  // for this scan, with files split across its partitions
+  override def equals(other: Any): Boolean = other.isInstanceOf[WholeFileText]
+  override def hashCode(): Int = getClass.hashCode
 }
 
 /** Run manifest documents (SURVEY.md §2 K2): one JSON per run under

@@ -3,10 +3,12 @@ package graft.tools
 import graft.SparkEntry
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
   ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+  SortMergeJoinExec}
 
 /** Plan auditor: writes `.explain("formatted")` of the FINAL adaptive
   * plan for each named query to `<outDir>/<query>_<suffix>.txt` — the
@@ -19,8 +21,9 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
   * explain shows isFinalPlan=false with zero codegen spans), then the
   * formatted mode string is persisted under a one-line audit of the
   * properties that matter at scale: shuffle, broadcast and reused
-  * exchanges (see [[exchanges]]), join strategies,
-  * whole-stage codegen spans, predicate pushdown (PushedFilters) and
+  * exchanges (see [[exchanges]]), join strategies (see [[joins]]),
+  * whole-stage codegen spans, partition pruning (PartitionFilters, see
+  * [[partitionFilters]]), predicate pushdown (PushedFilters) and
   * column pruning (ReadSchema). Uses the bench's own session shape
   * (local[32], shuffle.partitions=cpus) so plan shapes match what
   * Bench times.
@@ -45,16 +48,19 @@ object PlanDump {
       df.queryExecution.executedPlan.execute().count()
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      val plan = df.queryExecution.executedPlan.toString()
-      def lines(node: String) = plan.split("\n").count(_.contains(node))
+      val executed = df.queryExecution.executedPlan
+      val plan = executed.toString()
       def distinct(re: String) = re.r.findAllIn(plan).toSeq.distinct
         .mkString(" | ")
-      val ex = exchanges(df.queryExecution.executedPlan)
+      val ex = exchanges(executed)
+      val j = joins(executed)
       val audit = s"[audit] shuffles=${ex.shuffles}" +
         s" broadcasts=${ex.broadcasts} reusedExchanges=${ex.reused}" +
-        " broadcastHashJoins=" + lines("BroadcastHashJoin") +
-        " sortMergeJoins=" + lines("SortMergeJoin") +
+        s" broadcastHashJoins=${j.broadcastHash}" +
+        s" sortMergeJoins=${j.sortMerge}" +
         " codegenSpans=" + codegenSpans(plan) +
+        " partitionFilters=" +
+        partitionFilters(executed).distinct.mkString(" | ") +
         " pushed=" + distinct("PushedFilters: \\[[^\\]]*\\]") +
         " readSchema=" + distinct("ReadSchema: [^\\n]*") + "\n"
       Files.write(outDir.resolve(s"${n}_$suffix.txt"),
@@ -82,6 +88,27 @@ object PlanDump {
       nodes.count(_.isInstanceOf[BroadcastExchangeLike]),
       nodes.count(_.isInstanceOf[ReusedExchangeExec]))
   }
+
+  case class Joins(broadcastHash: Int, sortMerge: Int)
+
+  /** Distinct broadcast-hash and sort-merge joins, by plan id, counted
+    * like [[exchanges]]. */
+  def joins(plan: SparkPlan): Joins = {
+    val nodes = PlanWalk.collectWithSubqueries(plan) {
+      case j @ (_: BroadcastHashJoinExec | _: SortMergeJoinExec) => j
+    }.distinctBy(_.id)
+    Joins(nodes.count(_.isInstanceOf[BroadcastHashJoinExec]),
+      nodes.count(_.isInstanceOf[SortMergeJoinExec]))
+  }
+
+  /** Each distinct file scan's partition filters, `[]` for a scan that
+    * prunes no partition — on a partitioned table read for one
+    * partition, that `[]` is the sign the predicate never reached the
+    * file listing. */
+  def partitionFilters(plan: SparkPlan): Seq[String] =
+    PlanWalk.collectWithSubqueries(plan) { case s: FileSourceScanExec => s }
+      .distinctBy(_.id)
+      .map(_.partitionFilters.mkString("[", ", ", "]"))
 
   private object PlanWalk extends AdaptiveSparkPlanHelper
 

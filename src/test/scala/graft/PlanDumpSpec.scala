@@ -3,7 +3,8 @@ package graft
 import graft.tools.PlanDump
 import org.apache.spark.sql.functions._
 
-/** PlanDump's audit counts exchanges as plan nodes, not as plan lines. */
+/** PlanDump's audit counts exchanges and joins as plan nodes, not as
+  * plan lines, and names each scan's partition filters. */
 class PlanDumpSpec extends SparkSpec {
 
   test("exchanges: distinct shuffles and broadcasts, reused apart") {
@@ -12,5 +13,22 @@ class PlanDumpSpec extends SparkSpec {
     df.queryExecution.executedPlan.execute().count()
     val ex = PlanDump.exchanges(df.queryExecution.executedPlan)
     assert(ex == PlanDump.Exchanges(shuffles = 1, broadcasts = 1, reused = 1))
+    assert(PlanDump.joins(df.queryExecution.executedPlan) ==
+      PlanDump.Joins(broadcastHash = 1, sortMerge = 0))
+  }
+
+  test("partitionFilters: one entry per scan, [] when nothing is pruned") {
+    val path = tmpDir("plandump") + "/t"
+    spark.range(20).withColumn("p", col("id") % 4)
+      .write.partitionBy("p").parquet(path)
+    def filters(df: org.apache.spark.sql.DataFrame) = {
+      df.queryExecution.executedPlan.execute().count()
+      PlanDump.partitionFilters(df.queryExecution.executedPlan)
+    }
+    val pruned = filters(spark.read.parquet(path).filter(col("p") === 2))
+    assert(pruned.size == 1 && pruned.head.contains("(p#") &&
+      pruned.head.contains("= 2)"), pruned)
+    assert(filters(spark.read.parquet(path).filter(col("id") === 2)) ==
+      Seq("[]"))
   }
 }
