@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The only session builder: every entry point (tests, Verify, Bench,
   * pipelines, tools) builds through [[builder]] or [[get]], so all of
   * them run the same conf surface — UTC, ns-parquet tolerance, AQE,
-  * non-ANSI mode, and local-sized shuffle partitioning. Callers pass
+  * non-ANSI mode, local-sized shuffle partitioning, and the `file:`
+  * file system that sets modes without forking `chmod`. Callers pass
   * their own core count and set their own log level; `BuilderGuardSpec`
   * fails the build if another `SparkSession.builder()` appears.
   */
@@ -87,7 +88,10 @@ object GraftSession {
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.ansi.enabled", "false")
-        .config("spark.ui.enabled", "false")) {
+        .config("spark.ui.enabled", "false")
+        // no chmod process per created file (see NioLocalFileSystem)
+        .config("spark.hadoop.fs.file.impl",
+          classOf[NioLocalFileSystem].getName)) {
       case (b, (k, v)) => b.config(k, v)
     }
 

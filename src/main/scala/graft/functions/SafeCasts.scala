@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
 /** Null-tolerant scalar conversions — the engine's equivalent of the
@@ -18,19 +18,19 @@ import org.apache.spark.sql.functions._
   *   - safeText serializes nested structures to JSON text instead of
   *     failing.
   *
-  * All combinators are Column→Column over built-ins: codegen'd, no UDFs.
+  * All combinators are Column→Column and codegen'd, no UDFs. The shared
+  * cleaning step (unwrap, trim, `''` → NULL) is one native expression,
+  * `graft.expressions.SafeScalar`: composed from built-ins it was ~20
+  * plan nodes per call, and a gold table makes hundreds of calls; the
+  * casts after it are built-in `try_` forms.
   */
 object SafeCasts {
 
-  /** Unwrap {"value": x} / {"id": x} drift payloads on a JSON-string
-    * column: returns the inner scalar when present, else the input. */
-  private def unwrap(c: Column): Column =
-    coalesce(get_json_object(c, "$.value"), get_json_object(c, "$.id"), c)
-
-  private def cleaned(c: Column): Column = {
-    val s = trim(unwrap(c.cast("string")))
-    when(s === "", lit(null)).otherwise(s)
-  }
+  /** Unwrap {"value": x} / {"id": x} drift payloads, trim spaces, and
+    * turn empty text into NULL (see [[graft.expressions.SafeScalar]]). */
+  private def cleaned(c: Column): Column =
+    GraftColumnBridge.column(graft.expressions.SafeScalar(
+      GraftColumnBridge.expression(c.cast("string"))))
 
   /** Text → BIGINT; accepts "42", "42.0" via truncation? No — reference
     * _safe_int(int(float)) accepts floats, so parse as decimal then

@@ -74,7 +74,7 @@ object NearDup {
     * shingle sets, so collapsing them would drop a member whose true
     * shingle Jaccard to the rep can be 0 — silently diverging from the
     * exact-Jaccard policy every dedup operator here documents. */
-  private def rawShingles(df: DataFrame, idCol: String,
+  private[graft] def rawShingles(df: DataFrame, idCol: String,
       textCol: String): DataFrame =
     df.withColumn("__tk", TextOps.tokens(col(textCol)))
       .select(col(idCol),
@@ -97,11 +97,16 @@ object NearDup {
     * documented stage). Only ≥3-token docs collapse: shorter docs have
     * no shingles, are never candidates, and identical copies of them
     * must keep surviving. */
-  private def collapseExactClasses(sh: DataFrame,
+  private[graft] def collapseExactClasses(sh: DataFrame,
       idCol: String): (DataFrame, DataFrame) = {
-    val eligible = sh.filter(col("__ntk") >= 3)
-    val reps = eligible.groupBy("__fp").agg(min(col(idCol)).as("__rep"))
-    val removedExact = eligible.join(reps, "__fp")
+    import org.apache.spark.sql.expressions.Window
+    // the class minimum as a window over (id, __fp), not a join back
+    // to a grouped frame: a join keyed on the string __fp is planned
+    // as a broadcast, and a string-keyed broadcast pins a whole memory
+    // page for as long as it lives
+    val removedExact = sh.filter(col("__ntk") >= 3)
+      .select(col(idCol),
+        min(col(idCol)).over(Window.partitionBy("__fp")).as("__rep"))
       .filter(col(idCol) =!= col("__rep"))
       .select(col(idCol))
     (sh.join(removedExact, Seq(idCol), "left_anti"), removedExact)

@@ -3,6 +3,7 @@ package graft.tools
 import graft.SparkEntry
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
@@ -22,7 +23,8 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
   * formatted mode string is persisted under a one-line audit of the
   * properties that matter at scale: shuffle, broadcast and reused
   * exchanges (see [[exchanges]]), join strategies (see [[joins]]),
-  * whole-stage codegen spans, partition pruning (PartitionFilters, see
+  * whole-stage codegen spans, the optimized plan's expression nodes
+  * (see [[expressionNodes]]), partition pruning (PartitionFilters, see
   * [[partitionFilters]]), predicate pushdown (PushedFilters) and
   * column pruning (ReadSchema). Uses the bench's own session shape
   * (local[32], shuffle.partitions=cpus) so plan shapes match what
@@ -59,6 +61,7 @@ object PlanDump {
         s" broadcastHashJoins=${j.broadcastHash}" +
         s" sortMergeJoins=${j.sortMerge}" +
         " codegenSpans=" + codegenSpans(plan) +
+        " expressions=" + expressionNodes(df.queryExecution.optimizedPlan) +
         " partitionFilters=" +
         partitionFilters(executed).distinct.mkString(" | ") +
         " pushed=" + distinct("PushedFilters: \\[[^\\]]*\\]") +
@@ -109,6 +112,15 @@ object PlanDump {
     PlanWalk.collectWithSubqueries(plan) { case s: FileSourceScanExec => s }
       .distinctBy(_.id)
       .map(_.partitionFilters.mkString("[", ", ", "]"))
+
+  /** Expression nodes of a logical plan, subqueries included: every
+    * node of every expression tree the plan's operators hold. Analysis,
+    * optimization, code generation and task serialization each walk
+    * them, so this is the plan's size as those phases see it. */
+  def expressionNodes(plan: LogicalPlan): Int =
+    plan.collectWithSubqueries { case p =>
+      p.expressions.map(_.collect { case e => e }.size).sum
+    }.sum
 
   private object PlanWalk extends AdaptiveSparkPlanHelper
 

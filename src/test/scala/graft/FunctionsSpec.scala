@@ -1,6 +1,10 @@
 package graft
 
 import graft.functions.{JsonOps, Keys, SafeCasts, TextOps, VectorOps}
+import graft.gold.Evo
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 
 /** Unit specs for the Column-combinator library (SURVEY.md §5.2). */
@@ -70,6 +74,78 @@ class FunctionsSpec extends SparkSpec {
     val expected = garbage.map(g => Seq.tabulate(6)(i =>
       if (g == "1e30" && i == 3) Some(1e30) else None))
     assert(off == expected)
+  }
+
+  // SafeScalar against the composed built-in form it replaces
+  private def composedCleaned(c: Column): Column = {
+    val s = trim(coalesce(get_json_object(c, "$.value"),
+      get_json_object(c, "$.id"), c))
+    when(s === "", lit(null)).otherwise(s)
+  }
+
+  private val cleanInputs: Seq[String] = Seq(
+    "42", "42.9", "abc", "true", " 7 ", "  x  y  ", "\t8\t", "\n9\n",
+    " \t ", "", "   ",
+    """{"value": 42}""", """{"id": "x"}""", """{"value": 1, "id": 2}""",
+    """{"id": 3, "value": " v "}""", """{"value": null, "id": 5}""",
+    """{"value": ""}""", """{"value": "   "}""", """{"value": {"a": 1}}""",
+    """{"id": {"value": 4}}""", """{"value": [1, 2]}""", "{}",
+    "[1]", """[{"value": 1}]""", "{abc", "a{b", """  {"value": 6}""",
+    "\uFEFF" + """{"value": 7}""", "ünïcødé ✓", """{"value": "ação"}""",
+    """{"value": 10} trailing""", null)
+
+  private def cleanedBothWays(df: DataFrame): Seq[(Any, Any, Any, Any)] =
+    df.select(col("i"), SafeCasts.safeText(col("s")),
+      composedCleaned(col("s")), SafeCasts.safeLong(col("s")),
+      composedCleaned(col("s")).try_cast("decimal(28,8)").try_cast("long"))
+      .orderBy("i").collect()
+      .map(r => (r.get(1), r.get(2), r.get(3), r.get(4))).toSeq
+
+  private def assertCleanedParity(df: DataFrame): Unit = {
+    val key = "spark.sql.ansi.enabled"
+    val saved = spark.conf.get(key)
+    try for (ansi <- Seq("true", "false")) {
+      spark.conf.set(key, ansi)
+      val rows = cleanedBothWays(df)
+      assert(rows.size == cleanInputs.size)
+      rows.zip(cleanInputs).foreach { case ((t, refT, l, refL), in) =>
+        assert(t == refT && l == refL,
+          s"ansi=$ansi input=[$in]: ($t, $l) vs ($refT, $refL)")
+      }
+    } finally spark.conf.set(key, saved)
+  }
+
+  test("SafeScalar == composed cleaning, interpreted (local relation)") {
+    val df = cleanInputs.zipWithIndex.map { case (s, i) => (i, s) }
+      .toDF("i", "s")
+    // ConvertToLocalRelation evaluates the projection on the driver
+    assert(df.select(SafeCasts.safeText(col("s"))).queryExecution
+      .optimizedPlan.isInstanceOf[LocalRelation])
+    assertCleanedParity(df)
+  }
+
+  test("SafeScalar == composed cleaning, whole-stage codegen'd") {
+    val path = tmpDir("safescalar") + "/t"
+    cleanInputs.zipWithIndex.map { case (s, i) => (i, s) }.toDF("i", "s")
+      .write.parquet(path)
+    val saved = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val df = spark.read.parquet(path)
+      val plan = df.select(SafeCasts.safeText(col("s")))
+        .queryExecution.executedPlan
+      assert(plan.exists(_.isInstanceOf[WholeStageCodegenExec]))
+      assertCleanedParity(df)
+    } finally spark.conf.set("spark.sql.codegen.fallback", saved)
+  }
+
+  test("Evo.members plan stays small: one node per safe-cast clean") {
+    val silver = Seq(("{}", "r1")).toDF("raw_data", "run_id")
+      .withColumn("_loaded_at", current_timestamp())
+      .withColumn("_updated_at", current_timestamp())
+    val nodes = graft.tools.PlanDump.expressionNodes(
+      Evo.members(silver).queryExecution.analyzed)
+    assert(nodes <= 700, s"$nodes analyzed expression nodes")
   }
 
   // ---- Keys (K6) — exact parity with the Python reference constants

@@ -402,6 +402,53 @@ class NearDupSpec extends SparkSpec {
     assert(inc == Seq(10L))
   }
 
+  test("exact-class collapse == the grouped join it replaced") {
+    val shortDup = "two words"
+    val docs = Seq[(Long, String)]((5L, textA), (2L, textA), (9L, textA),
+      (3L, textC), (8L, textC), (4L, textE), (6L, shortDup),
+      (7L, shortDup), (10L, null), (11L, null))
+      .toDF("doc_id", "text")
+    val sh = NearDup.rawShingles(docs, "doc_id", "text")
+    // the join form: class minimum by groupBy, joined back on __fp
+    val eligible = sh.filter(col("__ntk") >= 3)
+    val reps = eligible.groupBy("__fp").agg(min(col("doc_id")).as("__rep"))
+    val refRemoved = eligible.join(reps, "__fp")
+      .filter(col("doc_id") =!= col("__rep")).select("doc_id")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    val (kept, removed) = NearDup.collapseExactClasses(sh, "doc_id")
+    assert(ids(removed) == ids(refRemoved) && ids(removed) == Seq(5L, 8L, 9L))
+    assert(ids(kept) == ids(sh.join(refRemoved, Seq("doc_id"), "left_anti")))
+  }
+
+  test("dedupByMinhash plans no string-keyed broadcast join") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.types.StringType
+    object Walk extends AdaptiveSparkPlanHelper
+    // through adaptive stages, subqueries and the operator's caches
+    def nodes(p: SparkPlan): Seq[SparkPlan] =
+      Walk.collectWithSubqueries(p) { case n => n }.flatMap {
+        case s: InMemoryTableScanExec => s +: nodes(s.relation.cachedPlan)
+        case n => Seq(n)
+      }
+    val docs = Seq((1L, textA), (2L, textA), (3L, textC), (4L, textC))
+      .toDF("doc_id", "text")
+    val out = NearDup.dedupByMinhash(docs, "doc_id", "text", 0.8)
+    assert(out.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(1L, 3L))
+    val all = nodes(out.queryExecution.executedPlan)
+    assert(all.exists(_.isInstanceOf[InMemoryTableScanExec]))
+    val stringKeyed = all.collect {
+      case j: BroadcastHashJoinExec
+          if j.leftKeys.exists(_.dataType == StringType) => j
+    }
+    assert(stringKeyed.isEmpty, stringKeyed.mkString("\n"))
+    CacheRegistry.release()
+  }
+
   test("dedupBySemanticCells: within-cell near-dups go, cross-cell stay") {
     val cents = Seq((0L, Seq(1.0, 0.0, 0.0, 0.0)),
       (1L, Seq(0.0, 1.0, 0.0, 0.0))).toDF("cent_id", "cv")

@@ -31,4 +31,18 @@ class PlanDumpSpec extends SparkSpec {
     assert(filters(spark.read.parquet(path).filter(col("id") === 2)) ==
       Seq("[]"))
   }
+
+  test("expressionNodes: every node of every expression, subqueries too") {
+    def nodes(df: org.apache.spark.sql.DataFrame) =
+      PlanDump.expressionNodes(df.queryExecution.optimizedPlan)
+    val base = spark.range(10).toDF()
+    // one Project holding Alias(Add(id, 1))
+    assert(nodes(base.select((col("id") + 1).as("x"))) == nodes(base) + 4)
+    val viaLiteral = spark.sql("SELECT id FROM range(10) WHERE id > 3")
+    val viaSubquery = spark.sql(
+      "SELECT id FROM range(10) WHERE id > (SELECT max(id) FROM range(5))")
+    // the subquery's plan (Aggregate over Range) is counted, not just
+    // the node that stands for it
+    assert(nodes(viaSubquery) >= nodes(viaLiteral) + 4)
+  }
 }
