@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions.{aggregate, array, coalesce, col, floor, g
   * readable until a [[vacuum]] whose retention window (`keepLast`)
   * excludes them removes their manifests and unreferenced data.
   *
-  * MERGE semantics are [[MergeOps.merge]]/[[Dedup.keepLatest]] — a
+  * MERGE semantics are [[MergeOps.merge]]/[[MergeOps.firstLoad]] — a
   * format binding chooses storage, never meaning. Data files carry
   * partition columns as plain columns (no hive layout): snapshot reads
   * prune by parquet row-group stats instead of directory names; a
@@ -403,7 +403,7 @@ object CommitLogTableFormat extends TableFormat {
     // answers with row-group stats — semantics are identical either way
     commitWith(spark, path) {
       case None =>
-        Dedup.keepLatest(source, keys, Seq(col(versionCol)))
+        MergeOps.firstLoad(source, keys, versionCol, preserveOnUpdate)
       case Some(target) =>
         MergeOps.merge(target, source, keys, versionCol, preserveOnUpdate)
     }

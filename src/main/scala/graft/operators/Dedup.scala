@@ -24,22 +24,6 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** Shuffle-light alternative for wide rows: max_by via struct ordering
-    * — single aggregate, no window sort. Used when the payload is one
-    * column (silver raw rows). `orderCols` compares as a struct
-    * (lexicographic), so callers append a unique lineage column as the
-    * final element to make the ordering total — same contract as
-    * [[keepLatest]]. */
-  def keepLatestAgg(df: DataFrame, keys: Seq[String], orderCols: Seq[String],
-      payload: String): DataFrame = {
-    val carried = (payload +: orderCols).distinct
-    val winner = max_by(struct(carried.map(col): _*),
-      struct(orderCols.map(col): _*)).as("__w")
-    df.groupBy(keys.map(col): _*).agg(winner)
-      .select((keys.map(col) ++
-        carried.map(c => col(s"__w.$c").as(c))): _*)
-  }
-
   /** Exact duplicate removal on a subset of columns (D4). */
   def distinctOn(df: DataFrame, cols: Seq[String]): DataFrame =
     df.select(cols.map(col): _*).distinct()

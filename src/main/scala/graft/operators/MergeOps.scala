@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Keyed-upsert semantics over plain Parquet tables (SURVEY.md §2
@@ -37,7 +38,14 @@ import org.apache.spark.sql.types.StructType
   * from one footer on the driver (`readIfExists`) instead of through
   * Spark's one-task inference job, and the merge itself is one keyed
   * window over target ∪ source (`merge`), with no second scan of the
-  * target and no join.
+  * target and no join. One-stage rule (`fitsOnePartition`): when the
+  * target's listed bytes plus Spark's size estimate of the delta are
+  * within the session's `spark.sql.adaptive.coalescePartitions.
+  * minPartitionSize` (1 MB by default) — the size below which AQE
+  * would collapse the merge's shuffle to one partition anyway — the
+  * window or aggregate is planned at one partition (`coalesce(1)`),
+  * so no exchange is planned and the write is one stage and one job.
+  * Above that bound the plan keeps its key shuffle and AQE.
   *
   * Crash safety: every swap goes target→`__bak`, tmp→target, drop bak —
   * a crash between the renames leaves `__bak` holding the full pre-swap
@@ -75,9 +83,19 @@ object MergeOps {
     * footer on the driver and handed to the reader, so opening a table
     * launches no Spark job (see [[footerSchema]]). */
   def readIfExists(spark: SparkSession, path: String): Option[DataFrame] =
+    open(spark, path).map(_._1)
+
+  /** [[readIfExists]] plus the bytes of the table's data files, summed
+    * over the listing the footer read walks (Long.MaxValue when no
+    * listing was taken — a size never guessed small). */
+  private def open(spark: SparkSession,
+      path: String): Option[(DataFrame, Long)] =
     if (!exists(spark, path)) None
-    else Some(footerSchema(spark, path)
-      .fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path)))
+    else {
+      val (schema, bytes) = footerSchema(spark, path)
+      Some((schema.fold(spark.read.parquet(path))(
+        s => spark.read.schema(s).parquet(path)), bytes))
+    }
 
   /** The data schema Spark's non-merging parquet inference would find:
     * the footer of the first data file in path order (the files Spark's
@@ -86,11 +104,12 @@ object MergeOps {
     * one-task job; here it is read on the driver and converted with
     * Spark's own converter under the session's conf. None — infer as
     * usual — when schema merging is on, summary files exist, or there
-    * is no data file. */
+    * is no data file. Also returns the listed files' total bytes
+    * (Long.MaxValue when schema merging skips the listing). */
   private def footerSchema(spark: SparkSession,
-      path: String): Option[StructType] = {
+      path: String): (Option[StructType], Long) = {
     val conf = spark.sessionState.conf
-    if (conf.isParquetSchemaMergingEnabled) return None
+    if (conf.isParquetSchemaMergingEnabled) return (None, Long.MaxValue)
     val (f, root) = fs(spark, path)
     // Spark's file-index name filter (PartitioningAwareFileIndex)
     def hidden(n: String) =
@@ -103,16 +122,38 @@ object MergeOps {
         .filter(s => !hidden(s.getPath.getName) || summary(s.getPath.getName))
         .flatMap(s => if (s.isDirectory) files(s.getPath) else Seq(s))
     val listed = files(root)
-    if (listed.exists(s => summary(s.getPath.getName))) return None
-    listed.sortBy(_.getPath.toString).headOption.map { first =>
+    val bytes = listed.map(_.getLen).sum
+    if (listed.exists(s => summary(s.getPath.getName))) return (None, bytes)
+    (listed.sortBy(_.getPath.toString).headOption.map { first =>
       val meta = ParquetFooterReader.readFooter(
         HadoopInputFile.fromStatus(first,
           spark.sparkContext.hadoopConfiguration),
         ParquetMetadataConverter.SKIP_ROW_GROUPS)
       ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, meta),
         new ParquetToSparkSchemaConverter(conf))
-    }
+    }, bytes)
   }
+
+  /** The one-stage rule. AQE collapses a shuffle whose map output is
+    * below the session's `coalescePartitions.minPartitionSize` to one
+    * partition; a write whose target (its listed bytes) plus delta
+    * (Spark's size estimate of its optimized plan) fit within that
+    * same bound is planned at one partition from the start
+    * ([[onePartition]]): `SinglePartition` satisfies the clustered
+    * distribution of a keyed window or aggregate, so no exchange is
+    * planned and the write is one stage and one job, without a
+    * shuffle-map job and AQE's re-plan between the two. */
+  private def fitsOnePartition(spark: SparkSession, targetBytes: Long,
+      delta: DataFrame): Boolean =
+    BigInt(targetBytes) + delta.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      spark.sessionState.conf.getConf(
+        SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+
+  /** `df` at one partition when `one` (see [[fitsOnePartition]]);
+    * otherwise exactly `df`, so a write above the bound keeps its
+    * shuffle and AQE plan. */
+  private def onePartition(df: DataFrame, one: Boolean): DataFrame =
+    if (one) df.coalesce(1) else df
 
   /** Atomic-ish overwrite: write to `<path>__tmp`, then swap via
     * `__bak` (see crash-safety note on the object). Plain
@@ -154,13 +195,11 @@ object MergeOps {
     * whole key group), else the winner's. No second target scan, no
     * join. A NULL key never matches an existing row (it would not in
     * a keyed join either), so its preserved columns keep the winner's
-    * values. Output columns: source order with target-only columns
-    * appended; when anything is preserved, the keys come first — the
-    * layout every table upserted with a preserved column already has
-    * on disk. */
+    * values. Output columns: [[layout]]. `one` plans the window at
+    * one partition ([[fitsOnePartition]]). */
   private[operators] def merge(target: DataFrame, source: DataFrame,
       keys: Seq[String], versionCol: String,
-      preserveOnUpdate: Seq[String]): DataFrame = {
+      preserveOnUpdate: Seq[String], one: Boolean = false): DataFrame = {
     // Schema evolution (case-insensitive name matching like Spark's
     // resolver): source-only columns widen the table (NULL for old
     // rows); target-only columns are auto-preserved so a transient
@@ -169,23 +208,16 @@ object MergeOps {
     val missing = target.columns.toSeq
       .filterNot(c => srcNames.contains(c.toLowerCase))
     val preserve = (preserveOnUpdate ++ missing).distinct
-    val all = source.withColumn("__is_new", lit(1))
+    val all = onePartition(source.withColumn("__is_new", lit(1))
       .unionByName(target.withColumn("__is_new", lit(0)),
-        allowMissingColumns = true)
+        allowMissingColumns = true), one)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(versionCol).desc, col("__is_new").desc)
     val group = w.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
     val keyed = keys.map(k => col(k).isNotNull).reduce(_ && _)
-    def is(a: String, b: String) = a.equalsIgnoreCase(b)
-    // by name as stored: a dot in a column name is not a field path
-    def stored(n: String) = col("`" + n.replace("`", "``") + "`")
     val names = all.columns.toSeq.filterNot(_ == "__is_new")
-    val ordered =
-      if (preserve.isEmpty) names
-      else keys.flatMap(k => names.find(is(_, k))) ++
-        names.filterNot(n => keys.exists(is(n, _)))
-    val out = ordered.map { n =>
+    val out = layout(names, keys, preserve).map { n =>
       preserve.find(is(_, n)).fold(stored(n)) { p =>
         coalesce(when(keyed, first(when(col("__is_new") === 0, stored(n)),
           ignoreNulls = true).over(group)), stored(n)).as(p)
@@ -193,6 +225,32 @@ object MergeOps {
     }
     all.select(out :+ row_number().over(w).as("__rn"): _*)
       .filter(col("__rn") === 1).drop("__rn")
+  }
+
+  private def is(a: String, b: String) = a.equalsIgnoreCase(b)
+
+  // by name as stored: a dot in a column name is not a field path
+  private def stored(n: String) = col("`" + n.replace("`", "``") + "`")
+
+  /** A merged table's columns: `names` (source order, target-only
+    * columns appended) when nothing is preserved; otherwise the keys
+    * first, then the rest in that order. */
+  private def layout(names: Seq[String], keys: Seq[String],
+      preserve: Seq[String]): Seq[String] =
+    if (preserve.isEmpty) names
+    else keys.flatMap(k => names.find(is(_, k))) ++
+      names.filterNot(n => keys.exists(is(n, _)))
+
+  /** A table's first load: the latest row per key within the batch (ON
+    * CONFLICT processes a batch row by row, so duplicate keys in one
+    * batch still collapse), in the column [[layout]] every later
+    * [[merge]] writes — a table's columns do not move on its second
+    * upsert. Shared by every [[TableFormat]], like [[merge]]. */
+  private[operators] def firstLoad(source: DataFrame, keys: Seq[String],
+      versionCol: String, preserveOnUpdate: Seq[String]): DataFrame = {
+    val latest = Dedup.keepLatest(source, keys, Seq(col(versionCol)))
+    latest.select(layout(latest.columns.toSeq, keys, preserveOnUpdate)
+      .map(stored): _*)
   }
 
   /** Upsert `source` into the parquet table at `path`, keyed on `keys`,
@@ -224,17 +282,15 @@ object MergeOps {
         partitionCols.length)
       spark.catalog.refreshByPath(path)
     }
-    readIfExists(spark, path) match {
+    open(spark, path) match {
       case None =>
-        // within-batch dedup also on first load: ON CONFLICT processes a
-        // batch row-by-row, so duplicate keys in one batch still collapse
-        overwrite(spark,
-          Dedup.keepLatest(source, keys, Seq(col(versionCol))), path,
-          partitionCols)
-      case Some(target) if partitionCols.isEmpty =>
-        overwrite(spark,
-          merge(target, source, keys, versionCol, preserveOnUpdate), path)
-      case Some(target) =>
+        overwrite(spark, firstLoad(
+          onePartition(source, fitsOnePartition(spark, 0L, source)), keys,
+          versionCol, preserveOnUpdate), path, partitionCols)
+      case Some((target, bytes)) if partitionCols.isEmpty =>
+        overwrite(spark, merge(target, source, keys, versionCol,
+          preserveOnUpdate, fitsOnePartition(spark, bytes, source)), path)
+      case Some((target, bytes)) =>
         // a source-only column must land in EVERY partition's files —
         // plain (non-mergeSchema) reads take the schema from one
         // footer, so a column present only in the touched partitions
@@ -244,13 +300,14 @@ object MergeOps {
         val tgtNames = target.columns.map(_.toLowerCase).toSet
         val widens = source.columns
           .exists(c => !tgtNames.contains(c.toLowerCase))
+        val one = fitsOnePartition(spark, bytes, source)
         if (widens)
           overwrite(spark,
-            merge(target, source, keys, versionCol, preserveOnUpdate),
+            merge(target, source, keys, versionCol, preserveOnUpdate, one),
             path, partitionCols)
         else
           upsertPartitioned(spark, target, source, path, keys, versionCol,
-            preserveOnUpdate, partitionCols)
+            preserveOnUpdate, partitionCols, one)
     }
   }
 
@@ -258,12 +315,15 @@ object MergeOps {
     * tuples (small — one row per touched partition), prune the target
     * read to those (static partition pruning at the parquet scan),
     * merge, then swap ONLY the touched partition directories under the
-    * table root. Untouched partitions keep their exact files. */
+    * table root. Untouched partitions keep their exact files. `one`
+    * plans both the partition collect and the merge at one partition
+    * ([[fitsOnePartition]]). */
   private def upsertPartitioned(spark: SparkSession, target: DataFrame,
       source: DataFrame, path: String, keys: Seq[String],
       versionCol: String, preserveOnUpdate: Seq[String],
-      partitionCols: Seq[String]): Unit = {
-    val parts = source.select(partitionCols.map(col): _*).distinct().collect()
+      partitionCols: Seq[String], one: Boolean): Unit = {
+    val parts = onePartition(source.select(partitionCols.map(col): _*), one)
+      .distinct().collect()
     if (parts.isEmpty) return
     val touched: Column = parts.map { r =>
       partitionCols.zipWithIndex
@@ -271,7 +331,7 @@ object MergeOps {
         .reduce(_ && _)
     }.reduce(_ || _)
     val merged = merge(target.filter(touched), source, keys, versionCol,
-      preserveOnUpdate)
+      preserveOnUpdate, one)
 
     val (f, targetP) = fs(spark, path)
     val tmp = new Path(path + "__tmp")
@@ -333,23 +393,47 @@ object MergeOps {
   }
 
   /** Insert-ignore (K8): only keys absent from the target are added —
-    * the ON CONFLICT DO NOTHING bridge-table pattern. */
+    * the ON CONFLICT DO NOTHING bridge-table pattern. Like [[merge]],
+    * one keyed window over target keys ∪ source decides it: per key,
+    * the first source row is inserted unless the target holds that
+    * key. A NULL key never matches an existing row, so one row per
+    * NULL key group is always inserted (what a keyed anti join after
+    * a dedup inserts). Only the target's keys enter the window; its
+    * rows are unioned back unchanged for the write. (A dedup + anti
+    * join cannot be held at one partition: Spark's optimizer pushes a
+    * left-anti join below a coalesce, so it would plan an exchange or
+    * a broadcast job all the same.) */
   def insertIgnore(spark: SparkSession, source: DataFrame, path: String,
-      keys: Seq[String]): Unit = {
-    readIfExists(spark, path) match {
-      case None => overwrite(spark, source.dropDuplicates(keys), path)
-      case Some(target) =>
+      keys: Seq[String]): Unit =
+    open(spark, path) match {
+      case None => overwrite(spark, onePartition(source,
+        fitsOnePartition(spark, 0L, source)).dropDuplicates(keys), path)
+      case Some((target, bytes)) =>
+        val all = onePartition(source.withColumn("__is_new", lit(1))
+          .unionByName(target.select(keys.map(col): _*)
+            .withColumn("__is_new", lit(0)), allowMissingColumns = true),
+          fitsOnePartition(spark, bytes, source))
+        val w = Window.partitionBy(keys.map(col): _*)
+          .orderBy(col("__is_new").desc)
+        val keyed = keys.map(k => col(k).isNotNull).reduce(_ && _)
+        val known = max(when(col("__is_new") === 0 && keyed, lit(true)))
+          .over(w.rowsBetween(Window.unboundedPreceding,
+            Window.unboundedFollowing))
+        val cols = source.columns.toSeq.map(stored)
+        val novel = all
+          .select(cols :+ col("__is_new") :+ known.as("__known") :+
+            row_number().over(w).as("__rn"): _*)
+          .filter(col("__rn") === 1 && col("__is_new") === 1 &&
+            col("__known").isNull)
+          .select(cols: _*)
         // union-by-name, same evolution semantics as merge and the
         // commit-log format's insertIgnore — the TableFormat seam
         // must not drift on what an insert means: source-only columns
         // widen the table (NULL for existing rows), a narrow source
         // inserts NULLs instead of failing analysis
-        val novel = source.dropDuplicates(keys)
-          .join(target.select(keys.map(col): _*).distinct(), keys, "left_anti")
         overwrite(spark, target.unionByName(novel,
           allowMissingColumns = true), path)
     }
-  }
 
   /** Full refresh (K9): TRUNCATE+INSERT equivalent. */
   def fullRefresh(spark: SparkSession, source: DataFrame, path: String): Unit =

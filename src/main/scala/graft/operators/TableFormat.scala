@@ -53,7 +53,7 @@ trait TableFormat {
   * recorded in `log` for assertion.
   *
   * MERGE semantics are shared with the parquet implementation
-  * (MergeOps.merge / Dedup.keepLatest), not re-implemented — a format
+  * (MergeOps.merge / MergeOps.firstLoad), not re-implemented — a format
   * binding chooses STORAGE, never meaning. */
 class InMemoryTableFormat extends TableFormat {
   import org.apache.spark.sql.functions.col
@@ -76,7 +76,7 @@ class InMemoryTableFormat extends TableFormat {
     log += (("upsert", path))
     store(path, tables.get(path) match {
       case None =>
-        Dedup.keepLatest(source, keys, Seq(col(versionCol)))
+        MergeOps.firstLoad(source, keys, versionCol, preserveOnUpdate)
       case Some(target) =>
         MergeOps.merge(target, source, keys, versionCol, preserveOnUpdate)
     })

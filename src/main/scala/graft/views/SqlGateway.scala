@@ -30,31 +30,32 @@ object SqlGateway {
   val Scopes: Seq[String] = Seq("comercial", "expansao")
 
   /** Register all materialized gold tables (+ derived views where their
-    * inputs exist) and the SQL functions. Returns registered names. */
+    * inputs exist) and the SQL functions. Returns registered names.
+    * Each table is opened once, through the pipeline's format, and the
+    * derived views are built from those same frames. */
   def register(spark: SparkSession, pipe: MedallionPipeline): Seq[String] = {
     Keys.registerSqlFunctions(spark)
-    val present = GoldTables.filter(t =>
-      pipe.format.exists(spark, pipe.goldPath(t)))
-    present.foreach(t => pipe.gold(t).createOrReplaceTempView(t))
+    val opened: Seq[(String, DataFrame)] = GoldTables.flatMap(t =>
+      pipe.format.read(spark, pipe.goldPath(t)).map(t -> _))
+    opened.foreach { case (t, df) => df.createOrReplaceTempView(t) }
+    val gold = opened.toMap
 
     def view(name: String, needs: Seq[String])(f: => DataFrame): Unit =
-      if (needs.forall(present.contains)) f.createOrReplaceTempView(name)
+      if (needs.forall(gold.contains)) f.createOrReplaceTempView(name)
 
     view("vw_pd_sales_funnel", Seq("pd_deals", "pd_pipelines", "pd_stages"))(
-      Analytics.salesFunnel(pipe.gold("pd_deals"), pipe.gold("pd_pipelines"),
-        pipe.gold("pd_stages")))
+      Analytics.salesFunnel(gold("pd_deals"), gold("pd_pipelines"),
+        gold("pd_stages")))
     view("vw_pd_seller_performance", Seq("pd_deals", "pd_users"))(
-      Analytics.sellerPerformance(pipe.gold("pd_deals"),
-        pipe.gold("pd_users")))
+      Analytics.sellerPerformance(gold("pd_deals"), gold("pd_users")))
     view("vw_zd_ticket_metrics",
       Seq("zd_tickets", "zd_users", "zd_organizations", "zd_groups"))(
-      Analytics.ticketMetrics(pipe.gold("zd_tickets"), pipe.gold("zd_users"),
-        pipe.gold("zd_organizations"), pipe.gold("zd_groups")))
+      Analytics.ticketMetrics(gold("zd_tickets"), gold("zd_users"),
+        gold("zd_organizations"), gold("zd_groups")))
     view("vw_daily_entries", Seq("evo_entries"))(
-      Analytics.dailyEntries(pipe.gold("evo_entries")))
-    for (t <- ScopeViewTables if present.contains(t); s <- Scopes)
-      view(s"vw_${t}_$s", Seq(t))(
-        Analytics.scopeView(pipe.gold(t), s))
-    present
+      Analytics.dailyEntries(gold("evo_entries")))
+    for (t <- ScopeViewTables if gold.contains(t); s <- Scopes)
+      view(s"vw_${t}_$s", Seq(t))(Analytics.scopeView(gold(t), s))
+    opened.map(_._1)
   }
 }

@@ -203,20 +203,37 @@ class BronzePlanSpec extends SparkSpec {
       scope = Some("s1")).schema == scoped)
   }
 
-  test("a one-run loadEvoSilver launches at most 2 jobs") {
-    val root = tmpDir("bronzejobs")
-    val lines = (1 to 20).map(i => s"""{"idMember":$i,"name":"m$i"}""")
+  /** Jobs of one `loadEvoSilver` of `runId`: 20 members, ids from `from`. */
+  private def silverLoadJobs(root: String, pipe: MedallionPipeline,
+      runId: String, from: Int): Int = {
+    val lines = (from until from + 20)
+      .map(i => s"""{"idMember":$i,"name":"m$i"}""")
     Bronze.write(lines.toDF("line")
       .withColumn("entity", lit("members"))
       .withColumn("ingestion_date", lit("2026-01-01"))
-      .withColumn("run_id", lit("r1")), s"$root/bronze", "evo")
-    val pipe = new MedallionPipeline(spark, root)
-    val (_, jobs) = JobCounter.jobsDuring(spark.sparkContext) {
-      pipe.loadEvoSilver("members", "idMember", "r1",
+      .withColumn("run_id", lit(runId)), s"$root/bronze", "evo")
+    JobCounter.jobsDuring(spark.sparkContext) {
+      pipe.loadEvoSilver("members", "idMember", runId,
         ts("2026-01-01T00:00:00Z"))
-    }
-    assert(jobs <= 2, s"loadEvoSilver ran $jobs jobs")
+    }._2
+  }
+
+  test("a one-run loadEvoSilver launches exactly 1 job") {
+    val root = tmpDir("bronzejobs")
+    val pipe = new MedallionPipeline(spark, root)
+    val jobs = silverLoadJobs(root, pipe, "r1", 1)
+    assert(jobs == 1, s"loadEvoSilver ran $jobs jobs")
     assert(spark.read.parquet(pipe.silverPath("evo", "members")).count() == 20)
+  }
+
+  test("a second run's loadEvoSilver into an existing table: exactly 1 job") {
+    val root = tmpDir("bronzejobs")
+    val pipe = new MedallionPipeline(spark, root)
+    silverLoadJobs(root, pipe, "r1", 1)
+    // ids 11..30: 10 updates, 10 inserts
+    val jobs = silverLoadJobs(root, pipe, "r2", 11)
+    assert(jobs == 1, s"loadEvoSilver ran $jobs jobs")
+    assert(spark.read.parquet(pipe.silverPath("evo", "members")).count() == 30)
   }
 
   test("latestRunId lists run directories: no job, plain and scoped") {

@@ -8,7 +8,12 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.JobCounter
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** The lake's fixed per-table cost: `MergeOps.readIfExists` opens a
   * table without a Spark job and with the schema Spark's own inference
@@ -147,9 +152,9 @@ class LakeReadMergeSpec extends SparkSpec {
     var want: DataFrame = null
     for ((b, i) <- batches.zipWithIndex) {
       format.upsert(spark, b, path, keys, "v", preserve, Nil)
-      want =
-        if (want == null) Dedup.keepLatest(b, keys, Seq(col("v")))
-        else joinMerge(want, b, keys, "v", preserve)
+      // a first load stores what a merge into an empty table stores
+      want = joinMerge(if (want == null) b.limit(0) else want, b, keys, "v",
+        preserve)
       want = want.localCheckpoint(true)
       val got = format.read(spark, path).get
       assert(fields(got) == fields(want), s"schema after batch $i")
@@ -205,6 +210,15 @@ class LakeReadMergeSpec extends SparkSpec {
       Seq(dotted(day1), dotted(day2)))
   }
 
+  cases("the first load stores the layout later upserts keep") {
+      (format, path) =>
+    format.upsert(spark, day1, path, Seq("k1", "k2"), "v", Seq("loaded"), Nil)
+    val first = fields(format.read(spark, path).get)
+    assert(first.map(_._1) == Seq("k1", "k2", "payload", "v", "loaded"))
+    format.upsert(spark, day2, path, Seq("k1", "k2"), "v", Seq("loaded"), Nil)
+    assert(fields(format.read(spark, path).get) == first)
+  }
+
   cases("a stale redelivery never wins, a replay changes nothing") {
       (format, path) =>
     assertMergesLikeJoin(format, path, Seq("k1"), Seq("loaded"),
@@ -212,5 +226,158 @@ class LakeReadMergeSpec extends SparkSpec {
     assert(format.read(spark, path).get.orderBy("k1")
       .select("payload", "loaded").as[(String, String)].collect().toSeq ==
       Seq(("a2", "L1"), ("b", "L1"), ("c", "L2")))
+  }
+
+  // ------------------------------------------------- one-stage writes
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
+  private def withConf[A](k: String, v: String)(f: => A): A = {
+    val before = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try f finally before.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  /** A bound nothing fits under: every write keeps its shuffle. */
+  private def aboveBound[A](f: => A): A =
+    withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")(f)
+
+  /** The jobs `f` launches and the shuffle exchanges in the final
+    * adaptive plan of each query it runs. */
+  private def staged(f: => Unit): (Int, Seq[Int]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val l = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    JobCounter.drain(spark.sparkContext) // earlier queries' events
+    spark.listenerManager.register(l)
+    val (_, jobs) = try JobCounter.jobsDuring(spark.sparkContext)(f)
+      finally spark.listenerManager.unregister(l)
+    (jobs, plans.asScala.toSeq.map(p =>
+      PlanWalk.collect(p) { case e: ShuffleExchangeExec => e }.size))
+  }
+
+  private def assertOneStage(what: String, queries: Int)(f: => Unit): Unit = {
+    val (jobs, shuffles) = staged(f)
+    assert(shuffles.size == queries, s"$what: ${shuffles.size} queries")
+    assert(shuffles.forall(_ == 0), s"$what: exchanges $shuffles")
+    assert(jobs == queries, s"$what: $jobs jobs")
+  }
+
+  private def keyed(data: (Long, String)*) = data.toDF("k", "payload")
+
+  test("below the bound: each write is one job, no shuffle exchange") {
+    val flat = tmpDir("onestage") + "/t"
+    assertOneStage("first load", 1)(MergeOps.upsert(spark,
+      batch(Seq((1L, "a", 2023), (2L, "b", 2024)), "2026-01-01T00:00:00Z"),
+      flat, Seq("id"), "_updated_at", preserveOnUpdate = Seq("_loaded_at")))
+    assertOneStage("flat upsert", 1)(MergeOps.upsert(spark,
+      batch(Seq((2L, "b2", 2024), (3L, "c", 2024)), "2026-02-01T00:00:00Z"),
+      flat, Seq("id"), "_updated_at", preserveOnUpdate = Seq("_loaded_at")))
+
+    val parted = tmpDir("onestage") + "/t"
+    assertOneStage("partitioned first load", 1)(MergeOps.upsert(spark,
+      batch(Seq((1L, "a", 2023), (2L, "b", 2024)), "2026-01-01T00:00:00Z"),
+      parted, Seq("id"), "_updated_at", preserveOnUpdate = Seq("_loaded_at"),
+      partitionCols = Seq("entry_year")))
+    // the touched-partition collect and the merge: one job each
+    assertOneStage("partitioned upsert", 2)(MergeOps.upsert(spark,
+      batch(Seq((2L, "b2", 2024), (3L, "c", 2024)), "2026-02-01T00:00:00Z"),
+      parted, Seq("id"), "_updated_at", preserveOnUpdate = Seq("_loaded_at"),
+      partitionCols = Seq("entry_year")))
+
+    val bridge = tmpDir("onestage") + "/t"
+    assertOneStage("first insertIgnore", 1)(
+      MergeOps.insertIgnore(spark, keyed((1L, "a"), (1L, "a")), bridge,
+        Seq("k")))
+    assertOneStage("insertIgnore", 1)(
+      MergeOps.insertIgnore(spark, keyed((1L, "x"), (2L, "b")), bridge,
+        Seq("k")))
+    assert(spark.read.parquet(bridge).orderBy("k").as[(Long, String)]
+      .collect().toSeq == Seq((1L, "a"), (2L, "b")))
+  }
+
+  test("above the bound: the shuffle is still planned") {
+    aboveBound {
+      val flat = tmpDir("shuffled") + "/t"
+      for (day <- Seq("2026-01-01T00:00:00Z", "2026-02-01T00:00:00Z")) {
+        val (_, shuffles) = staged(MergeOps.upsert(spark,
+          batch(Seq((1L, "a", 2023), (2L, day, 2024)), day), flat, Seq("id"),
+          "_updated_at", preserveOnUpdate = Seq("_loaded_at")))
+        assert(shuffles.size == 1 && shuffles.head > 0, s"$day: $shuffles")
+      }
+      val parted = tmpDir("shuffled") + "/t"
+      for (day <- Seq("2026-01-01T00:00:00Z", "2026-02-01T00:00:00Z")) {
+        val (_, shuffles) = staged(MergeOps.upsert(spark,
+          batch(Seq((1L, "a", 2023), (2L, day, 2024)), day), parted,
+          Seq("id"), "_updated_at", preserveOnUpdate = Seq("_loaded_at"),
+          partitionCols = Seq("entry_year")))
+        assert(shuffles.nonEmpty && shuffles.forall(_ > 0), s"$day: $shuffles")
+      }
+      val bridge = tmpDir("shuffled") + "/t"
+      for (b <- Seq(keyed((1L, "a")), keyed((1L, "x"), (2L, "b")))) {
+        val (_, shuffles) = staged(
+          MergeOps.insertIgnore(spark, b, bridge, Seq("k")))
+        assert(shuffles.size == 1 && shuffles.head > 0, s"$shuffles")
+      }
+    }
+  }
+
+  /** The same upserts below and above the bound store the same table
+    * after every batch: rows, column names, types and order. */
+  private def assertPathsAgree(keys: Seq[String], preserve: Seq[String],
+      parts: Seq[String], batches: Seq[DataFrame]): Unit = {
+    val (one, shuffled) = (tmpDir("onepart") + "/t", tmpDir("shuffled") + "/t")
+    for ((b, i) <- batches.zipWithIndex) {
+      MergeOps.upsert(spark, b, one, keys, "v", preserve, parts)
+      aboveBound(MergeOps.upsert(spark, b, shuffled, keys, "v", preserve,
+        parts))
+      val (got, want) = (MergeOps.readIfExists(spark, one).get,
+        MergeOps.readIfExists(spark, shuffled).get)
+      assert(fields(got) == fields(want), s"schema after batch $i")
+      assert(rows(got) == rows(want), s"rows after batch $i")
+    }
+  }
+
+  test("one partition == shuffle: NULL keys, preserved and target-only " +
+      "columns, widening, replay") {
+    val nulls = Seq(
+      rowsOf(("a", Some(1L), Some(1L), 1L, "L1"),
+        ("n", Some(1L), None, 1L, "L1"), ("m", None, None, 1L, "L1")),
+      rowsOf(("a2", Some(1L), Some(1L), 2L, "L2"),
+        ("n2", Some(1L), None, 2L, "L2"), ("m2", None, None, 2L, "L2")))
+    assertPathsAgree(Seq("k1", "k2"), Seq("loaded"), Nil, nulls)
+    assertPathsAgree(Seq("k1"), Nil, Nil, Seq(day1, day2.drop("loaded", "k2")))
+    assertPathsAgree(Seq("k1"), Seq("loaded"), Nil,
+      Seq(day1, day2.withColumn("added", col("v") * 10), day1, day2, day2))
+    // partitioned by a column the key determines
+    def parted(df: DataFrame) = df.withColumn("p", col("k1") % 2)
+    assertPathsAgree(Seq("k1"), Seq("loaded"), Seq("p"),
+      Seq(day1, day2, day1, day2.withColumn("added", lit(1))).map(parted))
+  }
+
+  test("insertIgnore: one partition == shuffle == dedup + anti join") {
+    def rowsOf(data: (Option[Long], String)*) = data.toDF("k", "payload")
+    val (one, shuffled) = (tmpDir("onepart") + "/t", tmpDir("shuffled") + "/t")
+    val batches = Seq(rowsOf((Some(1L), "a"), (Some(1L), "a"), (None, "n")),
+      rowsOf((Some(1L), "x"), (Some(2L), "b"), (None, "n"), (None, "n"))
+        .withColumn("added", lit(7)),
+      rowsOf((Some(3L), "c"), (Some(2L), "y")))
+    var want: DataFrame = null
+    for ((b, i) <- batches.zipWithIndex) {
+      MergeOps.insertIgnore(spark, b, one, Seq("k"))
+      aboveBound(MergeOps.insertIgnore(spark, b, shuffled, Seq("k")))
+      // the anti-join form: a NULL key never matches an existing row
+      val novel = b.dropDuplicates("k")
+      want = (if (want == null) novel else want.unionByName(
+        novel.join(want.select("k").distinct(), Seq("k"), "left_anti"),
+        allowMissingColumns = true)).localCheckpoint(true)
+      for (got <- Seq(spark.read.parquet(one), spark.read.parquet(shuffled))) {
+        assert(fields(got) == fields(want), s"schema after batch $i")
+        assert(rows(got) == rows(want), s"rows after batch $i")
+      }
+    }
   }
 }

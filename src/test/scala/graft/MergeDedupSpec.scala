@@ -110,20 +110,6 @@ class MergeDedupSpec extends SparkSpec {
     assert(got == Seq((1L, "tagA"), (1L, "tagB"), (2L, "tagC")))
   }
 
-  test("keepLatestAgg: struct order with tie-break column, winner's cols carried") {
-    val df = Seq(
-      (1L, "old", 5L, 1L),
-      (1L, "tie-lo", 9L, 2L),
-      (1L, "tie-hi", 9L, 3L), // same version, higher lineage → must win
-      (2L, "only", 1L, 1L))
-      .toDF("id", "payload", "v", "line")
-    val got = Dedup.keepLatestAgg(df, Seq("id"), Seq("v", "line"), "payload")
-      .orderBy("id").collect()
-    assert(got.map(_.getAs[String]("payload")).toSeq == Seq("tie-hi", "only"))
-    // order cols come from the WINNING row, not independent maxes
-    assert(got(0).getAs[Long]("line") == 3L)
-  }
-
   test("partitioned upsert touches only delta partitions (files byte-stable)") {
     val path = tmpDir("pruned") + "/t"
     def batch(rows: Seq[(Long, String, Int)], at: String) =
