@@ -22,6 +22,11 @@ import org.apache.spark.sql.functions._
   * is one narrow shuffle on the 32-char fingerprint; stage 4 is the
   * banded-LSH pipeline. Ordering matters at 100 TB: the cheap filters
   * run first so the expensive signature stage sees only survivors.
+  *
+  * A small corpus is bound by per-stage cost, not by data:
+  * [[curateToShards]] plans an input within the one-partition bound
+  * ([[OnePartition]]) at one partition, where none of those shuffles
+  * is planned. [[curate]] itself plans what it is given.
   */
 object Curate {
 
@@ -107,29 +112,43 @@ object Curate {
     * language filter → exact dedup → near-dup dedup), an optional
     * deterministic downsample ([[Sample.hashSample]] — row-local,
     * reproducible, coordinated by salt), then token-budget shard
-    * assignment ([[Pack.packByBudget]]'s two-level prefix sum).
-    * Output: curated survivor rows + (n_tokens, shard).
+    * assignment (exclusive prefix sum of `n_tokens` in id order, DIV
+    * `shardBudget`). Output: curated survivor rows + (n_tokens, shard).
     *
     * Every stage is individually oracle-gated (t19/t16, t30, t33);
     * this is the one-call composition a pipeline actually runs. The
     * stage order matters at 100 TB: curation prunes before sampling
     * only because near-dup semantics must see the full corpus —
     * sampling first would change WHICH duplicates exist; packing runs
-    * last so shards are dense over exactly the surviving documents. */
+    * last so shards are dense over exactly the surviving documents.
+    *
+    * Two plans, one result. When Spark's size estimate of `df`'s plan
+    * fits the one-partition bound ([[OnePartition.fits]] — decided on
+    * the input, never on the curated output) the whole composition is
+    * planned at one partition: the keyed windows, aggregates and
+    * sort-merge joins of curation plan no exchange, and the shards come
+    * from one running-sum window ([[Pack.packByBudgetAtOnePartition]]).
+    * The call then launches no job; the pass runs as one query inside
+    * the consumer's action, and a null id fails that action. Above the
+    * bound the shards come from [[Pack.packByBudget]]'s two-level prefix
+    * sum, which runs its driver aggregates (and rejects null ids) here,
+    * at the call. */
   def curateToShards(df: DataFrame, idCol: String, textCol: String,
       shardBudget: Long, sampleFraction: Double = 1.0,
       salt: String = "graft", minTokens: Int = 20,
       maxTokens: Int = 100000, maxStopRatio: Double = 0.15,
       neardupThreshold: Double = 0.8): DataFrame = {
-    val curated = curate(df, idCol, textCol, minTokens, maxTokens,
-      maxStopRatio, neardupThreshold)
+    val one = OnePartition.fits(df.sparkSession, 0L, df)
+    val curated = curate(OnePartition(df, one), idCol, textCol, minTokens,
+      maxTokens, maxStopRatio, neardupThreshold)
     val sampled =
       if (sampleFraction >= 1.0) curated
       else Sample.hashSample(curated, idCol, sampleFraction, salt)
-    Pack.packByBudget(
-      sampled.withColumn("n_tokens",
-        size(TextOps.tokens(col(textCol))).cast("long")),
-      idCol, "n_tokens", shardBudget)
+    val counted = sampled.withColumn("n_tokens",
+      size(TextOps.tokens(col(textCol))).cast("long"))
+    if (one)
+      Pack.packByBudgetAtOnePartition(counted, idCol, "n_tokens", shardBudget)
+    else Pack.packByBudget(counted, idCol, "n_tokens", shardBudget)
   }
 
   /** One-row curation funnel report: survivor counts after each stage.

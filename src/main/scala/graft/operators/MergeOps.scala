@@ -9,7 +9,6 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Keyed-upsert semantics over plain Parquet tables (SURVEY.md §2
@@ -38,14 +37,16 @@ import org.apache.spark.sql.types.StructType
   * from one footer on the driver (`readIfExists`) instead of through
   * Spark's one-task inference job, and the merge itself is one keyed
   * window over target ∪ source (`merge`), with no second scan of the
-  * target and no join. One-stage rule (`fitsOnePartition`): when the
+  * target and no join. One-stage rule ([[OnePartition]]): when the
   * target's listed bytes plus Spark's size estimate of the delta are
   * within the session's `spark.sql.adaptive.coalescePartitions.
   * minPartitionSize` (1 MB by default) — the size below which AQE
   * would collapse the merge's shuffle to one partition anyway — the
   * window or aggregate is planned at one partition (`coalesce(1)`),
-  * so no exchange is planned and the write is one stage and one job.
-  * Above that bound the plan keeps its key shuffle and AQE.
+  * so no exchange is planned and the write is one stage and one job;
+  * a partitioned merge then also finds its touched partitions inside
+  * that one plan instead of collecting them first. Above that bound
+  * the plan keeps its key shuffle and AQE.
   *
   * Crash safety: every swap goes target→`__bak`, tmp→target, drop bak —
   * a crash between the renames leaves `__bak` holding the full pre-swap
@@ -134,27 +135,6 @@ object MergeOps {
     }, bytes)
   }
 
-  /** The one-stage rule. AQE collapses a shuffle whose map output is
-    * below the session's `coalescePartitions.minPartitionSize` to one
-    * partition; a write whose target (its listed bytes) plus delta
-    * (Spark's size estimate of its optimized plan) fit within that
-    * same bound is planned at one partition from the start
-    * ([[onePartition]]): `SinglePartition` satisfies the clustered
-    * distribution of a keyed window or aggregate, so no exchange is
-    * planned and the write is one stage and one job, without a
-    * shuffle-map job and AQE's re-plan between the two. */
-  private def fitsOnePartition(spark: SparkSession, targetBytes: Long,
-      delta: DataFrame): Boolean =
-    BigInt(targetBytes) + delta.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      spark.sessionState.conf.getConf(
-        SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
-
-  /** `df` at one partition when `one` (see [[fitsOnePartition]]);
-    * otherwise exactly `df`, so a write above the bound keeps its
-    * shuffle and AQE plan. */
-  private def onePartition(df: DataFrame, one: Boolean): DataFrame =
-    if (one) df.coalesce(1) else df
-
   /** Atomic-ish overwrite: write to `<path>__tmp`, then swap via
     * `__bak` (see crash-safety note on the object). Plain
     * mode("overwrite") deletes the target before reading finishes when
@@ -196,10 +176,14 @@ object MergeOps {
     * join. A NULL key never matches an existing row (it would not in
     * a keyed join either), so its preserved columns keep the winner's
     * values. Output columns: [[layout]]. `one` plans the window at
-    * one partition ([[fitsOnePartition]]). */
+    * one partition ([[OnePartition.fits]]). `touchedBy` (partition
+    * columns) keeps only the rows of partitions the source holds a row
+    * for, so the target may be read whole; a window over them plans no
+    * exchange only with `one`. */
   private[operators] def merge(target: DataFrame, source: DataFrame,
       keys: Seq[String], versionCol: String,
-      preserveOnUpdate: Seq[String], one: Boolean = false): DataFrame = {
+      preserveOnUpdate: Seq[String], one: Boolean = false,
+      touchedBy: Seq[String] = Nil): DataFrame = {
     // Schema evolution (case-insensitive name matching like Spark's
     // resolver): source-only columns widen the table (NULL for old
     // rows); target-only columns are auto-preserved so a transient
@@ -208,9 +192,16 @@ object MergeOps {
     val missing = target.columns.toSeq
       .filterNot(c => srcNames.contains(c.toLowerCase))
     val preserve = (preserveOnUpdate ++ missing).distinct
-    val all = onePartition(source.withColumn("__is_new", lit(1))
+    val union = OnePartition(source.withColumn("__is_new", lit(1))
       .unionByName(target.withColumn("__is_new", lit(0)),
         allowMissingColumns = true), one)
+    // a key's partition is stable (see upsert), so dropping whole
+    // untouched partitions keeps every touched key group whole
+    val all =
+      if (touchedBy.isEmpty) union
+      else union.withColumn("__touched", max(col("__is_new"))
+          .over(Window.partitionBy(touchedBy.map(col): _*)))
+        .filter(col("__touched") === 1).drop("__touched")
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(versionCol).desc, col("__is_new").desc)
     val group = w.rowsBetween(Window.unboundedPreceding,
@@ -285,11 +276,11 @@ object MergeOps {
     open(spark, path) match {
       case None =>
         overwrite(spark, firstLoad(
-          onePartition(source, fitsOnePartition(spark, 0L, source)), keys,
+          OnePartition(source, OnePartition.fits(spark, 0L, source)), keys,
           versionCol, preserveOnUpdate), path, partitionCols)
       case Some((target, bytes)) if partitionCols.isEmpty =>
         overwrite(spark, merge(target, source, keys, versionCol,
-          preserveOnUpdate, fitsOnePartition(spark, bytes, source)), path)
+          preserveOnUpdate, OnePartition.fits(spark, bytes, source)), path)
       case Some((target, bytes)) =>
         // a source-only column must land in EVERY partition's files —
         // plain (non-mergeSchema) reads take the schema from one
@@ -300,7 +291,7 @@ object MergeOps {
         val tgtNames = target.columns.map(_.toLowerCase).toSet
         val widens = source.columns
           .exists(c => !tgtNames.contains(c.toLowerCase))
-        val one = fitsOnePartition(spark, bytes, source)
+        val one = OnePartition.fits(spark, bytes, source)
         if (widens)
           overwrite(spark,
             merge(target, source, keys, versionCol, preserveOnUpdate, one),
@@ -311,27 +302,36 @@ object MergeOps {
     }
   }
 
-  /** Partition-pruned merge: collect the delta's distinct partition
-    * tuples (small — one row per touched partition), prune the target
-    * read to those (static partition pruning at the parquet scan),
-    * merge, then swap ONLY the touched partition directories under the
-    * table root. Untouched partitions keep their exact files. `one`
-    * plans both the partition collect and the merge at one partition
-    * ([[fitsOnePartition]]). */
+  /** Partition-pruned merge: only the partitions the delta touches
+    * are merged and written to `__tmp`, and only those directories are
+    * swapped under the table root; untouched partitions keep their
+    * exact files. Above the one-partition bound the delta's distinct
+    * partition tuples are collected (small — one row per touched
+    * partition) and prune the target read (static partition pruning
+    * at the parquet scan). At one partition ([[OnePartition.fits]]) the
+    * target is small by definition: it is read whole, and a window
+    * over the partition columns in the merge's own plan drops the
+    * untouched partitions, so the delta is evaluated once. */
   private def upsertPartitioned(spark: SparkSession, target: DataFrame,
       source: DataFrame, path: String, keys: Seq[String],
       versionCol: String, preserveOnUpdate: Seq[String],
       partitionCols: Seq[String], one: Boolean): Unit = {
-    val parts = onePartition(source.select(partitionCols.map(col): _*), one)
-      .distinct().collect()
-    if (parts.isEmpty) return
-    val touched: Column = parts.map { r =>
-      partitionCols.zipWithIndex
-        .map { case (c, i) => col(c) <=> lit(r.get(i)) }
-        .reduce(_ && _)
-    }.reduce(_ || _)
-    val merged = merge(target.filter(touched), source, keys, versionCol,
-      preserveOnUpdate, one)
+    val merged =
+      if (one)
+        merge(target, source, keys, versionCol, preserveOnUpdate, one,
+          touchedBy = partitionCols)
+      else {
+        val parts = source.select(partitionCols.map(col): _*)
+          .distinct().collect()
+        if (parts.isEmpty) return
+        val touched: Column = parts.map { r =>
+          partitionCols.zipWithIndex
+            .map { case (c, i) => col(c) <=> lit(r.get(i)) }
+            .reduce(_ && _)
+        }.reduce(_ || _)
+        merge(target.filter(touched), source, keys, versionCol,
+          preserveOnUpdate)
+      }
 
     val (f, targetP) = fs(spark, path)
     val tmp = new Path(path + "__tmp")
@@ -406,13 +406,13 @@ object MergeOps {
   def insertIgnore(spark: SparkSession, source: DataFrame, path: String,
       keys: Seq[String]): Unit =
     open(spark, path) match {
-      case None => overwrite(spark, onePartition(source,
-        fitsOnePartition(spark, 0L, source)).dropDuplicates(keys), path)
+      case None => overwrite(spark, OnePartition(source,
+        OnePartition.fits(spark, 0L, source)).dropDuplicates(keys), path)
       case Some((target, bytes)) =>
-        val all = onePartition(source.withColumn("__is_new", lit(1))
+        val all = OnePartition(source.withColumn("__is_new", lit(1))
           .unionByName(target.select(keys.map(col): _*)
             .withColumn("__is_new", lit(0)), allowMissingColumns = true),
-          fitsOnePartition(spark, bytes, source))
+          OnePartition.fits(spark, bytes, source))
         val w = Window.partitionBy(keys.map(col): _*)
           .orderBy(col("__is_new").desc)
         val keyed = keys.map(k => col(k).isNotNull).reduce(_ && _)

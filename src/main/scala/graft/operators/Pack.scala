@@ -30,6 +30,16 @@ import org.apache.spark.sql.functions._
   * bucketing keeps buckets contiguous for ANY id distribution; heavily
   * skewed ids just imbalance bucket sizes (raise nBuckets — each extra
   * bucket costs one 16-byte driver row).
+  *
+  * The two-level path runs on every call of [[packByBudget]] and of the
+  * sequence packers. It pays a persist, two driver collects (id
+  * bounds, bucket totals) and a broadcast join — fixed costs that buy
+  * parallelism. An input already planned at one partition
+  * ([[OnePartition]]) has no parallelism to buy: its single window is
+  * one task anyway, and [[packByBudgetAtOnePartition]] computes the
+  * same shards with it, lazily, inside the consumer's query.
+  * [[Curate.curateToShards]] takes that path when its input fits the
+  * one-partition bound, and the two-level path above it.
   */
 object Pack {
 
@@ -49,18 +59,52 @@ object Pack {
       .drop("__off")
   }
 
+  /** [[packByBudget]]'s shards for an input planned at one partition:
+    * `coalesce(sum(countCol) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED
+    * PRECEDING AND 1 PRECEDING), 0) DIV budget`, one running-sum window
+    * (a `SinglePartition` child satisfies its all-tuples distribution,
+    * so no exchange is planned). No persist, no driver collect, no
+    * broadcast: the call launches no job. The null-id contract holds
+    * inside the plan — a frame-wide null count in the same window, and
+    * a filter that raises [[packByBudget]]'s message when it is
+    * non-zero — so a null id fails the consumer's action (Spark's
+    * `raise_error`), where [[packByBudget]] fails the call itself. */
+  private[operators] def packByBudgetAtOnePartition(df: DataFrame,
+      idCol: String, countCol: String, budget: Long): DataFrame = {
+    require(budget > 0)
+    requireIntegralId(df, idCol)
+    val order = Window.orderBy(col(idCol).asc)
+    val nulls = count(when(col(idCol).isNull, 1)).over(
+      order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    val before = sum(col(countCol)).over(
+      order.rowsBetween(Window.unboundedPreceding, -1))
+    df.select(col("*"), nulls.as("__nulls"),
+        coalesce(before, lit(0L)).as("__off"))
+      .filter(when(col("__nulls") > 0, raise_error(concat(
+        lit(s"pack: id column '$idCol' has "), col("__nulls").cast("string"),
+        lit(NullIdsTail)))).otherwise(lit(true)))
+      .withColumn("shard", expr(s"__off DIV $budget"))
+      .drop("__nulls", "__off")
+  }
+
+  private val NullIdsTail =
+    " null rows; null ids have no position in the packing order"
+
+  // id must be integral: a numeric-STRING id would bucket by numeric
+  // cast but window-order lexicographically ("10" < "9"), silently
+  // diverging from the single-window prefix sum
+  private def requireIntegralId(df: DataFrame, idCol: String): Unit =
+    require(IntegralIdTypes.contains(df.schema(idCol).dataType),
+      s"packByBudget: id column '$idCol' must be an integral type, " +
+        s"got ${df.schema(idCol).dataType}")
+
   /** df + `__off`: each row's EXCLUSIVE prefix sum of `countCol` in
     * `idCol` order — the two-level decomposition documented on the
     * object, shared by [[packByBudget]] and [[packSequences]]. */
   private[operators] def withGlobalOffset(df: DataFrame, idCol: String,
       countCol: String, nBuckets: Int): DataFrame = {
     require(nBuckets > 0)
-    // id must be integral: a numeric-STRING id would bucket by numeric
-    // cast but window-order lexicographically ("10" < "9"), silently
-    // diverging from the single-window prefix sum
-    require(IntegralIdTypes.contains(df.schema(idCol).dataType),
-      s"packByBudget: id column '$idCol' must be an integral type, " +
-        s"got ${df.schema(idCol).dataType}")
+    requireIntegralId(df, idCol)
     // the operator runs two driver aggregates (bounds, bucket totals)
     // plus the consumer's action over the same input plan — persist it
     // so an expensive upstream (curateToShards runs the whole curation
@@ -78,8 +122,7 @@ object Pack {
     // would collapse every document to __off = 0 and interleave
     // packSequences output). Only genuinely EMPTY input passes through.
     require(bounds.getLong(2) == 0L,
-      s"pack: id column '$idCol' has ${bounds.getLong(2)} null " +
-        "rows; null ids have no position in the packing order")
+      s"pack: id column '$idCol' has ${bounds.getLong(2)}$NullIdsTail")
     if (bounds.isNullAt(0)) { // empty input
       return src.withColumn("__off", lit(0L))
     }

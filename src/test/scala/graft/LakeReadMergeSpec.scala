@@ -282,8 +282,8 @@ class LakeReadMergeSpec extends SparkSpec {
       batch(Seq((1L, "a", 2023), (2L, "b", 2024)), "2026-01-01T00:00:00Z"),
       parted, Seq("id"), "_updated_at", preserveOnUpdate = Seq("_loaded_at"),
       partitionCols = Seq("entry_year")))
-    // the touched-partition collect and the merge: one job each
-    assertOneStage("partitioned upsert", 2)(MergeOps.upsert(spark,
+    // the touched partitions are found in the merge's own plan
+    assertOneStage("partitioned upsert", 1)(MergeOps.upsert(spark,
       batch(Seq((2L, "b2", 2024), (3L, "c", 2024)), "2026-02-01T00:00:00Z"),
       parted, Seq("id"), "_updated_at", preserveOnUpdate = Seq("_loaded_at"),
       partitionCols = Seq("entry_year")))

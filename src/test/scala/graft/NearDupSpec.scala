@@ -206,6 +206,160 @@ class NearDupSpec extends SparkSpec {
     assert(sampled.size < rows.length)
   }
 
+  // ------------------------------------- curateToShards at one partition
+
+  private object PlanWalk
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  private def withConf[A](k: String, v: String)(f: => A): A = {
+    val before = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try f finally before.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  /** A bound nothing fits under: curateToShards keeps its shuffles and
+    * packs with Pack.packByBudget. */
+  private def aboveBound[A](f: => A): A =
+    withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")(f)
+
+  private val ShardBudget = 200L
+
+  /** A small corpus in three parquet files: distinct documents,
+    * exact-duplicate groups (byte-identical and case variants), a
+    * near-duplicate family, short documents, one document over the
+    * shard budget, and ids with gaps in shuffled order. */
+  private lazy val corpusDir: String = {
+    val rnd = new scala.util.Random(11)
+    val vocab = Array.tabulate(400)(i => "w" + Integer.toString(i * 7 + 11, 36))
+    val stop = Array("the", "of", "and", "to", "in", "a")
+    def words(n: Int) = {
+      val w = Array.fill(n)(vocab(rnd.nextInt(vocab.length)))
+      for (_ <- 0 until math.max(1, n * 8 / 100))
+        w(rnd.nextInt(n)) = stop(rnd.nextInt(stop.length))
+      w
+    }
+    val distinct = Seq.fill(40)(words(25 + rnd.nextInt(40)).mkString(" "))
+    val exact = Seq.fill(3)(words(30 + rnd.nextInt(20))).flatMap { w =>
+      Seq(w.mkString(" "), w.mkString(" "),
+        (w.head.toUpperCase +: w.tail).mkString(" "))
+    }
+    val family = {
+      val w = words(60)
+      (0 until 3).map { c =>
+        val v = w.clone()
+        if (c > 0) v(v.length - 1 - c) = vocab(rnd.nextInt(vocab.length))
+        v.mkString(" ")
+      }
+    }
+    val short = Seq.fill(4)(words(3 + rnd.nextInt(12)).mkString(" "))
+    val over = words((ShardBudget + ShardBudget / 4).toInt).mkString(" ")
+    val texts = distinct ++ exact ++ family ++ short :+ over
+    val ids = rnd.shuffle(texts.indices.map(i => i * 3L + rnd.nextInt(3)))
+    val dir = tmpDir("corpus") + "/docs"
+    ids.zip(texts).toDF("doc_id", "text").repartition(3)
+      .write.parquet(dir)
+    dir
+  }
+
+  private def shardsOf(sampleFraction: Double): (Seq[(Long, Long, Long)], Int) = {
+    val docs = spark.read.parquet(corpusDir)
+    val (out, jobs) = org.apache.spark.JobCounter.jobsDuring(
+        spark.sparkContext) {
+      graft.operators.Curate.curateToShards(docs, "doc_id", "text",
+        ShardBudget, sampleFraction, maxStopRatio = 0.5,
+        neardupThreshold = 0.7)
+    }
+    (out.select("doc_id", "n_tokens", "shard").as[(Long, Long, Long)]
+      .collect().toSeq.sortBy(_._1), jobs)
+  }
+
+  test("curateToShards: one-partition plan == two-level plan == prefix sum") {
+    for (fraction <- Seq(1.0, 0.8)) {
+      val (one, oneJobs) = shardsOf(fraction)
+      val (twoLevel, twoLevelJobs) = aboveBound(shardsOf(fraction))
+      assert(one == twoLevel, s"fraction $fraction")
+      // each bound took its own path: Pack's driver collects run at
+      // the call, the one-partition pass only in the consumer's action
+      assert(oneJobs == 0 && twoLevelJobs > 0,
+        s"fraction $fraction: jobs $oneJobs, $twoLevelJobs")
+      // the packing itself, recomputed on the driver
+      val prefix = one.map(_._2).scanLeft(0L)(_ + _)
+      assert(one.map(_._3) == prefix.init.map(_ / ShardBudget))
+      // the over-budget document is packed like any other
+      assert(one.exists(_._2 > ShardBudget))
+    }
+    // 57 documents: the 4 short ones, 2 copies of each of the 3 exact
+    // groups and 2 members of the near-dup family go; sampling drops more
+    assert(shardsOf(1.0)._1.size == 45)
+    assert(shardsOf(0.8)._1.size < 45)
+  }
+
+  test("curateToShards: a small pass plans no shuffle but the tar writer's") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+      ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // every shuffle of a plan, the plans of the caches it reads included
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      PlanWalk.flatMap(p) {
+        case e: ShuffleExchangeExec => Seq(e)
+        case s: InMemoryTableScanExec => shuffles(s.relation.cachedPlan)
+        case _ => Nil
+      }
+    val nShards = 3
+    def written(): Seq[ShuffleExchangeExec] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+      val l = new QueryExecutionListener {
+        def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+          plans.add(qe.executedPlan)
+        def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      val packed = graft.operators.Curate.curateToShards(
+        spark.read.parquet(corpusDir), "doc_id", "text", ShardBudget,
+        maxStopRatio = 0.5, neardupThreshold = 0.7)
+      org.apache.spark.JobCounter.drain(spark.sparkContext)
+      spark.listenerManager.register(l)
+      try graft.operators.TarShards.write(packed.select(col("doc_id"),
+          format_string("p%05d-%08d.txt", col("shard"), col("doc_id"))
+            .as("name"), encode(col("text"), "UTF-8").as("data")),
+        "doc_id", tmpDir("tars"), nShards)
+      finally {
+        org.apache.spark.JobCounter.drain(spark.sparkContext)
+        spark.listenerManager.unregister(l)
+      }
+      CacheRegistry.release()
+      assert(plans.size == 1, s"${plans.size} queries")
+      shuffles(plans.peek()).distinct
+    }
+    val small = written()
+    assert(small.size == 1 && small.forall(e =>
+      e.shuffleOrigin == REPARTITION_BY_NUM && e.numPartitions == nShards),
+      small.mkString("\n"))
+    // above the bound curation shuffles again
+    assert(aboveBound(written()).size > 1)
+  }
+
+  test("curateToShards: a null id fails the consumer's action at one " +
+      "partition, the call above the bound") {
+    // a document that survives curation loses its id
+    val victim = shardsOf(1.0)._1.head._1
+    val docs = spark.read.parquet(corpusDir)
+      .withColumn("doc_id", when(col("doc_id") =!= victim, col("doc_id")))
+    def pack() = graft.operators.Curate.curateToShards(docs, "doc_id",
+      "text", ShardBudget, maxStopRatio = 0.5, neardupThreshold = 0.7)
+    val contract = "has 1 null rows; null ids have no position in the " +
+      "packing order"
+    val lazyPass = pack() // no job, so nothing fails yet
+    val e = intercept[Exception](lazyPass.collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains(contract)), messages.mkString("\n"))
+    val eager = intercept[IllegalArgumentException](aboveBound(pack()))
+    assert(eager.getMessage.contains(contract))
+    CacheRegistry.release()
+  }
+
   test("simhash64 low half == simhash32 (same base hash, wider vote)") {
     val docs = Seq((1L, textA), (2L, textC), (3L, textE))
       .toDF("doc_id", "text")
