@@ -179,7 +179,8 @@ object MergeOps {
     * one partition ([[OnePartition.fits]]). `touchedBy` (partition
     * columns) keeps only the rows of partitions the source holds a row
     * for, so the target may be read whole; a window over them plans no
-    * exchange only with `one`. */
+    * exchange only with `one`. Its rows are sorted once, by partition
+    * then key, for both windows and the partitioned write. */
   private[operators] def merge(target: DataFrame, source: DataFrame,
       keys: Seq[String], versionCol: String,
       preserveOnUpdate: Seq[String], one: Boolean = false,
@@ -192,17 +193,13 @@ object MergeOps {
     val missing = target.columns.toSeq
       .filterNot(c => srcNames.contains(c.toLowerCase))
     val preserve = (preserveOnUpdate ++ missing).distinct
-    val union = OnePartition(source.withColumn("__is_new", lit(1))
+    val all = OnePartition(source.withColumn("__is_new", lit(1))
       .unionByName(target.withColumn("__is_new", lit(0)),
         allowMissingColumns = true), one)
-    // a key's partition is stable (see upsert), so dropping whole
-    // untouched partitions keeps every touched key group whole
-    val all =
-      if (touchedBy.isEmpty) union
-      else union.withColumn("__touched", max(col("__is_new"))
-          .over(Window.partitionBy(touchedBy.map(col): _*)))
-        .filter(col("__touched") === 1).drop("__touched")
-    val w = Window.partitionBy(keys.map(col): _*)
+    // a key's partition is stable (see upsert), so grouping keys within
+    // `touchedBy` splits no key group, and the one sort then serves this
+    // window, the touched window below and the partitioned write
+    val w = Window.partitionBy((touchedBy ++ keys).map(col): _*)
       .orderBy(col(versionCol).desc, col("__is_new").desc)
     val group = w.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
@@ -214,8 +211,13 @@ object MergeOps {
           ignoreNulls = true).over(group)), stored(n)).as(p)
       }
     }
-    all.select(out :+ row_number().over(w).as("__rn"): _*)
+    val merged = all.select(out :+ row_number().over(w).as("__rn") :+
+        max(col("__is_new")).over(group).as("__new"): _*)
       .filter(col("__rn") === 1).drop("__rn")
+    if (touchedBy.isEmpty) merged.drop("__new")
+    else merged.withColumn("__touched", max(col("__new"))
+        .over(Window.partitionBy(touchedBy.map(col): _*)))
+      .filter(col("__touched") === 1).drop("__new", "__touched")
   }
 
   private def is(a: String, b: String) = a.equalsIgnoreCase(b)

@@ -11,7 +11,6 @@ import graft.tools.PlanDump
 import org.apache.spark.JobCounter
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,17 +22,6 @@ import org.apache.spark.sql.types._
   */
 class BronzePlanSpec extends SparkSpec {
   import spark.implicits._
-
-  private def withConf[A](kv: (String, String)*)(f: => A): A = {
-    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  private object PlanWalk extends AdaptiveSparkPlanHelper
 
   /** The data files Spark lists under `dir` (no hidden/crc files). */
   private def dataFiles(dir: File): Seq[File] =

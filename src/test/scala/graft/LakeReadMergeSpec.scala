@@ -8,8 +8,7 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.JobCounter
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -230,21 +229,11 @@ class LakeReadMergeSpec extends SparkSpec {
 
   // ------------------------------------------------- one-stage writes
 
-  private object PlanWalk extends AdaptiveSparkPlanHelper
-
-  private def withConf[A](k: String, v: String)(f: => A): A = {
-    val before = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try f finally before.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-  }
-
-  /** A bound nothing fits under: every write keeps its shuffle. */
-  private def aboveBound[A](f: => A): A =
-    withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")(f)
-
-  /** The jobs `f` launches and the shuffle exchanges in the final
-    * adaptive plan of each query it runs. */
-  private def staged(f: => Unit): (Int, Seq[Int]) = {
+  /** The jobs `f` launches and how many `node`s the final adaptive
+    * plan of each query it runs holds (shuffle exchanges by default). */
+  private def staged(f: => Unit,
+      node: PartialFunction[SparkPlan, SparkPlan] = {
+        case e: ShuffleExchangeExec => e }): (Int, Seq[Int]) = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
     val l = new QueryExecutionListener {
       def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
@@ -255,8 +244,7 @@ class LakeReadMergeSpec extends SparkSpec {
     spark.listenerManager.register(l)
     val (_, jobs) = try JobCounter.jobsDuring(spark.sparkContext)(f)
       finally spark.listenerManager.unregister(l)
-    (jobs, plans.asScala.toSeq.map(p =>
-      PlanWalk.collect(p) { case e: ShuffleExchangeExec => e }.size))
+    (jobs, plans.asScala.toSeq.map(p => PlanWalk.collect(p)(node).size))
   }
 
   private def assertOneStage(what: String, queries: Int)(f: => Unit): Unit = {
@@ -297,6 +285,19 @@ class LakeReadMergeSpec extends SparkSpec {
         Seq("k")))
     assert(spark.read.parquet(bridge).orderBy("k").as[(Long, String)]
       .collect().toSeq == Seq((1L, "a"), (2L, "b")))
+  }
+
+  test("below the bound: a partitioned upsert sorts its rows once") {
+    // the key window, the touched-partition window and the partitioned
+    // write share one sort; each extra sort holds its own memory page
+    val parted = tmpDir("onesort") + "/t"
+    def upsert(b: DataFrame) = MergeOps.upsert(spark, b, parted, Seq("id"),
+      "_updated_at", preserveOnUpdate = Seq("_loaded_at"),
+      partitionCols = Seq("entry_year"))
+    upsert(batch(Seq((1L, "a", 2023), (2L, "b", 2024)), "2026-01-01T00:00:00Z"))
+    val (_, sorts) = staged(upsert(batch(Seq((2L, "b2", 2024), (3L, "c", 2024)),
+      "2026-02-01T00:00:00Z")), { case s: SortExec => s })
+    assert(sorts == Seq(1), s"sorts per query: $sorts")
   }
 
   test("above the bound: the shuffle is still planned") {

@@ -208,20 +208,6 @@ class NearDupSpec extends SparkSpec {
 
   // ------------------------------------- curateToShards at one partition
 
-  private object PlanWalk
-    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-
-  private def withConf[A](k: String, v: String)(f: => A): A = {
-    val before = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try f finally before.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-  }
-
-  /** A bound nothing fits under: curateToShards keeps its shuffles and
-    * packs with Pack.packByBudget. */
-  private def aboveBound[A](f: => A): A =
-    withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")(f)
-
   private val ShardBudget = 200L
 
   /** A small corpus in three parquet files: distinct documents,
@@ -577,14 +563,12 @@ class NearDupSpec extends SparkSpec {
 
   test("dedupByMinhash plans no string-keyed broadcast join") {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.types.StringType
-    object Walk extends AdaptiveSparkPlanHelper
     // through adaptive stages, subqueries and the operator's caches
     def nodes(p: SparkPlan): Seq[SparkPlan] =
-      Walk.collectWithSubqueries(p) { case n => n }.flatMap {
+      PlanWalk.collectWithSubqueries(p) { case n => n }.flatMap {
         case s: InMemoryTableScanExec => s +: nodes(s.relation.cachedPlan)
         case n => Seq(n)
       }
